@@ -75,8 +75,9 @@ def atomic_overwrite_parquet(
     Also lets ``upsert_by_key(read(path), delta)`` safely rewrite the very
     path it read from — Spark cannot overwrite an input in place.
 
-    ``partition_by`` hive-partitions the table — at scale, partition
-    pruning on those columns turns full scans into directory-pruned reads.
+    ``partition_by`` hive-partitions the table. No table in the package
+    is partitioned any more; the parameter stays only because the write
+    wrappers in ``perfbench/spans.py`` forward it positionally.
     """
     tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
     writer = df.write.mode("overwrite")
@@ -101,9 +102,7 @@ def atomic_overwrite_parquet(
 _POINTER = "_CURRENT"
 
 
-def commit_pointer_swap(
-    df: DataFrame, table_root: str, partition_by: list[str] | None = None
-) -> str:
+def commit_pointer_swap(df: DataFrame, table_root: str) -> str:
     """Cloud-commit-protocol table write: data lands under an immutable
     versioned prefix, then ONE tiny pointer object is atomically replaced.
 
@@ -125,11 +124,8 @@ def commit_pointer_swap(
     """
     version = f"v_{uuid.uuid4().hex[:12]}"
     data_path = os.path.join(table_root, version)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     try:
-        writer.parquet(data_path)
+        df.write.mode("overwrite").parquet(data_path)
     except BaseException:
         shutil.rmtree(data_path, ignore_errors=True)
         raise

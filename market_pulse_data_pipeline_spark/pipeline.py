@@ -34,18 +34,21 @@ from market_pulse_data_pipeline_spark.sources.landing import (
 
 def load_bronze(spark: SparkSession, landing_dir: str, warehouse_dir: str) -> DataFrame:
     """Entry point B (minio_to_snowflake.py): landing docs → keyed upsert
-    into the bronze table on SYMBOL (J2, last write wins)."""
+    into the bronze table on SYMBOL (J2, last write wins).
+
+    Bronze is written even when the upsert is empty, with no emptiness
+    check first, so the landing parse and the upsert run once. It is read
+    back with the explicit schema, which skips inference and keeps an
+    empty bronze readable with the bronze columns."""
     new = landing_to_raw(read_landing_json(spark, landing_dir))
     bronze_path = os.path.join(warehouse_dir, "raw_alphavantage")
     if os.path.exists(bronze_path):
-        old = spark.read.parquet(bronze_path)
+        old = spark.read.schema(RAW_ALPHAVANTAGE_SCHEMA).parquet(bronze_path)
         merged = upsert_by_key(old, new, "symbol")
     else:
         merged = new
-    if merged.isEmpty():
-        return spark.createDataFrame([], RAW_ALPHAVANTAGE_SCHEMA)
     atomic_overwrite_parquet(merged, bronze_path)
-    return spark.read.parquet(bronze_path)
+    return spark.read.schema(RAW_ALPHAVANTAGE_SCHEMA).parquet(bronze_path)
 
 
 def build_runner(spark: SparkSession, warehouse_dir: str) -> ModelRunner:
@@ -62,15 +65,10 @@ def build_runner(spark: SparkSession, warehouse_dir: str) -> ModelRunner:
         )
     )
     runner.add(Model("dim_stock", ["stg_alphavantage"], build_dim_stock))
+    # unpartitioned: every consumer scans the whole fact table, so one
+    # directory per symbol pruned nothing and multiplied files (SCALING.md)
     runner.add(
-        Model(
-            "fact_stock_prices",
-            ["stg_alphavantage", "dim_stock"],
-            build_fact_stock_prices,
-            # symbol-partitioned: per-symbol reads (the dominant access
-            # pattern downstream) prune to one directory
-            partition_by=["symbol"],
-        )
+        Model("fact_stock_prices", ["stg_alphavantage", "dim_stock"], build_fact_stock_prices)
     )
     runner.add(Model("agg_weekly_prices", ["fact_stock_prices"], build_agg_weekly_prices))
     # additive mart (not in the reference): weekly OHLC candlesticks

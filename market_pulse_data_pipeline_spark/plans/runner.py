@@ -30,7 +30,6 @@ class Model:
     deps: list[str]
     build: Callable[..., DataFrame]  # receives dep DataFrames in deps order
     materialize: bool = True
-    partition_by: list[str] | None = None  # hive partitioning for pruning
     # catalog schema when materializing as managed tables — mirrors the
     # reference's dbt schema split: staging models → `staging`, marts →
     # `analytics` (dbt_project.yml:4-10)
@@ -88,18 +87,15 @@ class ModelRunner:
                         wh.removeprefix("file:"), f"{model.schema}.db", name
                     )
                     shutil.rmtree(loc, ignore_errors=True)
-                writer = df.write.mode("overwrite")
-                if model.partition_by:
-                    writer = writer.partitionBy(*model.partition_by)
-                writer.saveAsTable(fq)
+                df.write.mode("overwrite").saveAsTable(fq)
                 df = self.spark.table(fq)
             elif model.materialize and self.commit_protocol == "pointer":
                 path = self.table_path(name)
-                data_path = commit_pointer_swap(df, path, model.partition_by)
+                data_path = commit_pointer_swap(df, path)
                 df = self.spark.read.schema(df.schema).parquet(data_path)
             elif model.materialize:
                 path = self.table_path(name)
-                atomic_overwrite_parquet(df, path, model.partition_by)
+                atomic_overwrite_parquet(df, path)
                 # explicit schema: skips inference (a listing+footer pass)
                 # and keeps an EMPTY materialization readable — a write
                 # of 0 rows leaves no schema-bearing part files

@@ -22,7 +22,10 @@ from market_pulse_data_pipeline_spark.operators.merge import (
     atomic_overwrite_parquet,
     upsert_by_key,
 )
-from market_pulse_data_pipeline_spark.schemas import ALPHAVANTAGE_DOC_SCHEMA
+from market_pulse_data_pipeline_spark.schemas import (
+    ALPHAVANTAGE_DOC_SCHEMA,
+    RAW_ALPHAVANTAGE_SCHEMA,
+)
 from market_pulse_data_pipeline_spark.sources.landing import landing_to_raw
 
 
@@ -49,11 +52,13 @@ def stream_landing_to_bronze(
     )
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # no emptiness check: it would parse the batch twice. A batch of
+        # only invalid documents rewrites bronze unchanged, or empty.
         new = landing_to_raw(batch_df)
-        if new.isEmpty():
-            return
         if os.path.exists(bronze_path):
-            old = batch_df.sparkSession.read.parquet(bronze_path)
+            old = batch_df.sparkSession.read.schema(RAW_ALPHAVANTAGE_SCHEMA).parquet(
+                bronze_path
+            )
             merged = upsert_by_key(old, new, "symbol")
         else:
             merged = new

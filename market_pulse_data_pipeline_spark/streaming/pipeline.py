@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from market_pulse_data_pipeline_spark.operators.qc import QCResult, run_reference_suite
 from market_pulse_data_pipeline_spark.pipeline import build_runner
+from market_pulse_data_pipeline_spark.schemas import RAW_ALPHAVANTAGE_SCHEMA
 from market_pulse_data_pipeline_spark.streaming.ingest import stream_landing_to_bronze
 
 
@@ -42,15 +43,12 @@ def run_incremental(
 
     bronze_path = os.path.join(warehouse_dir, "raw_alphavantage")
     if os.path.exists(bronze_path):
-        raw = spark.read.parquet(bronze_path)
+        # explicit schema: skips inference; bronze is empty when every
+        # landed document lacked a series
+        raw = spark.read.schema(RAW_ALPHAVANTAGE_SCHEMA).parquet(bronze_path)
     else:
         # empty landing: the availableNow stream produced no batch and
-        # bronze was never written — mirror pipeline.load_bronze's
-        # empty-schema behavior instead of raising on the missing path
-        from market_pulse_data_pipeline_spark.schemas import (  # noqa: PLC0415
-            RAW_ALPHAVANTAGE_SCHEMA,
-        )
-
+        # bronze was never written
         raw = spark.createDataFrame([], RAW_ALPHAVANTAGE_SCHEMA)
     runner = build_runner(spark, warehouse_dir)
     tables = runner.run({"raw_alphavantage": raw})

@@ -3,17 +3,20 @@
 including the §2.7 quirk cases."""
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from market_pulse_data_pipeline_spark.pipeline import run_pipeline
+from market_pulse_data_pipeline_spark.pipeline import load_bronze, run_pipeline
+from market_pulse_data_pipeline_spark.schemas import RAW_ALPHAVANTAGE_SCHEMA
 from market_pulse_data_pipeline_spark.sources.alphavantage import (
     default_fixture_docs,
     make_fixture_doc,
     merge_series_doc,
     write_fixture_landing,
 )
+from market_pulse_data_pipeline_spark.sources.landing import write_landing_doc
 
 
 @pytest.fixture(scope="module")
@@ -91,6 +94,40 @@ def test_qc_suite_green(pipeline_out):
     _, qc, _, _ = pipeline_out
     failures = [r for r in qc if not r.passed]
     assert failures == []
+
+
+def test_fact_table_unpartitioned(pipeline_out):
+    """One directory of part files, no symbol=... directories; the column
+    order is build_fact_stock_prices', symbol first."""
+    tables, _, _, warehouse = pipeline_out
+    entries = os.listdir(os.path.join(warehouse, "fact_stock_prices"))
+    assert entries and not [e for e in entries if e.startswith("symbol=")]
+    assert tables["fact_stock_prices"].columns[0] == "symbol"
+
+
+def test_series_less_landing_builds_empty_marts(spark, tmp_path):
+    """Only documents without a series and no bronze yet: bronze is
+    written empty and stays readable, every mart is empty, QC is green."""
+    landing = str(tmp_path / "landing")
+    warehouse = str(tmp_path / "warehouse")
+    write_landing_doc(landing, "RATE", {"Note": "API call frequency exceeded"})
+    meta_only = make_fixture_doc("AAPL", n_days=5)
+    del meta_only["Time Series (Daily)"]
+    write_landing_doc(landing, "AAPL", meta_only)
+
+    raw = load_bronze(spark, landing, warehouse)
+    assert raw.count() == 0
+    assert [(f.name, f.dataType) for f in raw.schema] == [
+        (f.name, f.dataType) for f in RAW_ALPHAVANTAGE_SCHEMA
+    ]
+
+    # second cycle reads the empty bronze written by the first
+    tables, qc = run_pipeline(spark, landing, warehouse)
+    for name in ("stg_alphavantage", "dim_stock", "fact_stock_prices",
+                 "agg_weekly_prices", "agg_weekly_ohlc"):
+        assert tables[name].count() == 0, name
+    assert len(qc) == 10
+    assert [r for r in qc if not r.passed] == []
 
 
 def test_upsert_idempotent_and_last_write_wins(spark, pipeline_out):

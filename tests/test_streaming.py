@@ -154,6 +154,27 @@ def test_run_incremental_empty_landing(spark, tmp_path):
     assert tables["stg_alphavantage"].count() == 0
 
 
+def test_run_incremental_series_less_batch(spark, tmp_path):
+    """A micro-batch of only series-less documents writes an empty bronze;
+    the marts rebuild empty from it and the next batch upserts into it."""
+    from market_pulse_data_pipeline_spark.sources.landing import write_landing_doc
+    from market_pulse_data_pipeline_spark.streaming.pipeline import run_incremental
+
+    landing, wh, ck = (str(tmp_path / d) for d in ("landing", "wh", "ck"))
+    write_landing_doc(landing, "RATE", {"Note": "API call frequency exceeded"})
+    tables, qc = run_incremental(spark, landing, wh, ck)
+    assert os.path.isdir(os.path.join(wh, "raw_alphavantage"))
+    assert tables["raw_alphavantage"].count() == 0
+    assert tables["fact_stock_prices"].count() == 0
+    assert all(r.passed for r in qc)
+
+    write_fixture_landing(landing, {"AAPL": make_fixture_doc("AAPL", n_days=5)})
+    tables, qc = run_incremental(spark, landing, wh, ck)
+    assert tables["raw_alphavantage"].count() == 1
+    assert tables["stg_alphavantage"].count() == 5
+    assert all(r.passed for r in qc)
+
+
 def test_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
     """Stream-stream interval join (clicks -> purchases within 15 min)
     over an availableNow run equals the batch interval join."""
