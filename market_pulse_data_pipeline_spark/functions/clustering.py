@@ -1,15 +1,24 @@
 """Distributed clustering / decomposition over embedding columns.
 
-Two iterative algorithms a training-data pipeline runs over its
+The iterative algorithms a training-data pipeline runs over its
 embedding store, in their scale-correct Spark shapes:
 
-- ``kmeans``: Lloyd's iterations. Centroids live on the driver
-  (k×dim floats — bounded, independent of row count) and are
-  broadcast into an Arrow-batched assignment UDF; the update step is
-  a posexplode + groupBy(cluster, pos) partial/final aggregate, so the
-  per-iteration shuffle carries at most k×dim cells per partition,
-  never rows. Deterministic: init is the first k vectors by id, and
-  ties in argmin break toward the lower cluster id.
+- ONE integer-snapped Lloyd loop (``_snapped_fit``) behind every
+  k-means-shaped fit: ``kmeans_snapped`` / ``kmeans_snapped_fit`` are
+  its ``m = 1`` call, ``pq_train_snapped`` its ``m``-subspace call, and
+  the IVF-ANN path (``functions/similarity.py::ivf_ann_topk``) trains
+  its coarse codebook through ``kmeans_snapped_fit``. Vectors quantize
+  to ``round(x * scale)`` int64s and materialize once (``fan_out`` +
+  ``localCheckpoint``); each iteration is ONE fused ``mapInPandas``
+  pass that assigns every row (``_argmin_codes``: expanded-form int64
+  argmin, ties toward the lower id) and emits per-partition partial
+  sums keyed by (subspace, cluster, pos). Small partials merge on the
+  driver (``_DIRECT_MERGE_MAX_CELLS``), larger ones through one
+  groupBy. Centroid = coordinate-sum DIV count (truncating toward
+  zero); empty clusters keep their previous centroid. Driver state is
+  the int64 ``(m, k, dim // m)`` codebook — k x dim cells, independent
+  of row count — and every step replays in DuckDB
+  (``kmeans_oracle_sql``, ``pq_oracle_sql``).
 
 - ``pca_components`` / ``pca_project``: principal components via the
   d×d Gram matrix. Each partition emits ONE partial Gram (mapInPandas
@@ -27,8 +36,8 @@ embedding store, in their scale-correct Spark shapes:
   ``pca_oracle_sql``. Same distributed shape; the registry's PCA row
   uses this variant so it hash-checks against DuckDB.
 
-Neither shape ever materializes an n×n or n×d driver-side structure;
-both survive 100 TB with the same code path.
+None of these shapes ever materializes an n×n or n×d driver-side
+structure; they survive 100 TB with the same code path.
 """
 
 from __future__ import annotations
@@ -42,76 +51,12 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 
-def _collect_init_centroids(
-    emb: DataFrame, k: int, id_col: str, vec_col: str
-) -> np.ndarray:
-    rows = (
-        emb.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    )  # bounded: k vectors
-    return np.array([r[vec_col] for r in rows], dtype=np.float64)
-
-
-def _assign_udf(centroids: np.ndarray):
-    c = centroids  # captured; broadcast with the serialized UDF
-
-    @pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        x = np.stack(vecs.to_numpy()).astype(np.float64)  # (batch, dim)
-        # ||x - c||² = ||x||² - 2 x·c + ||c||²; ||x||² constant per row
-        d2 = -2.0 * (x @ c.T) + (c * c).sum(axis=1)[None, :]
-        return pd.Series(np.argmin(d2, axis=1).astype(np.int32))
-
-    return assign
-
-
-def _fit_centroids(
-    src: DataFrame, centroids: np.ndarray, iters: int
-) -> np.ndarray:
-    """Lloyd iterations over ``src(id, v)``; empty clusters keep their
-    previous centroid. Per-iteration driver data: k×dim cells."""
-    for _ in range(iters):
-        assigned = src.withColumn("cluster", _assign_udf(centroids)("v"))
-        # update: k×dim cells after map-side partial aggregation
-        sums = (
-            assigned.select("cluster", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )  # bounded: k*dim rows
-        new_c = centroids.copy()
-        acc = {}
-        for r in sums:
-            acc.setdefault(r["cluster"], {})[r["pos"]] = (r["s"], r["n"])
-        for ci, cols in acc.items():
-            for pos, (s, n) in cols.items():
-                new_c[ci, pos] = s / n
-        centroids = new_c
-    return centroids
-
-
-def kmeans(
-    emb: DataFrame,
-    k: int = 10,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd's k-means; returns (id, cluster) assignments after
-    ``iters`` full iterations from the deterministic first-k init."""
-    centroids = _collect_init_centroids(emb, k, id_col, vec_col)
-    src = emb.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-    centroids = _fit_centroids(src, centroids, iters)
-    return src.withColumn("cluster", _assign_udf(centroids)("v")).select(
-        id_col, "cluster"
-    )
-
-
 SNAP_SCALE = 1_000_000
 
 # Ceiling on n_partitions x k x dim for the fused Lloyd update to
 # collect per-partition partials DIRECTLY and merge them on the driver
-# (r17): below it, the per-iteration groupBy(cluster, pos) shuffle
-# stage is pure fixed cost — the driver merge of a few thousand rows
+# (r17): below it, the per-iteration groupBy shuffle stage is pure
+# fixed cost — the driver merge of a few thousand rows
 # replaces a whole second stage per iteration (measured 1.062 ->
 # 0.805 s over a 3-iteration fit at sf0.1, centroids bit-identical;
 # integer sums are combination-order-independent so WHERE the partials
@@ -235,37 +180,32 @@ def kmeans_oracle_sql(
     return "".join(parts)
 
 
+def _argmin_codes(x: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
+    """Nearest codeword per subspace: ``(n, m)`` int32 codes for int64
+    rows ``x`` (n x m*sub) against the int64 ``(m, k, sub)`` codebook.
+    Expanded form argmin ||x-c||² == argmin(-2 x·c + ||c||²) — pure
+    int64, exact (|q| ≤ scale, so every term is far below 2^63);
+    np.argmin breaks ties toward the lower id, as the oracle's
+    ``ORDER BY dist, cid`` does. The ONE assignment kernel: the Lloyd
+    partial sums, the final assignment (with or without n2) and
+    ``pq_encode_snapped`` all call it."""
+    m, _, sub = books.shape
+    codes = np.empty((x.shape[0], m), dtype=np.int32)
+    for j in range(m):
+        b = books[j]
+        xs = x[:, j * sub : (j + 1) * sub]
+        d2 = -2 * (xs @ b.T) + (b * b).sum(axis=1)[None, :]
+        codes[:, j] = np.argmin(d2, axis=1)
+    return codes
+
+
 def _assign_udf_snapped(centroids: "np.ndarray"):
-    c = centroids  # int64 (k, dim); captured, ships with the UDF
+    books = centroids[None]  # int64 (1, k, dim); ships with the UDF
 
     @pandas_udf(T.IntegerType())
     def assign(vecs: pd.Series) -> pd.Series:
         x = np.stack(vecs.to_numpy()).astype(np.int64)  # (batch, dim)
-        # argmin ||x-c||² == argmin(-2 x·c + ||c||²); pure int64 — exact
-        # (|q| ≤ scale, so every term is far below 2^63)
-        d2 = -2 * (x @ c.T) + (c * c).sum(axis=1)[None, :]
-        return pd.Series(np.argmin(d2, axis=1).astype(np.int32))
-
-    return assign
-
-
-def _assign_codes_udf_snapped(books: "np.ndarray"):
-    """Fused product-quantization assignment: one Arrow pass emits all
-    ``m`` per-subspace codes per row, each subspace using exactly the
-    ``_assign_udf_snapped`` arithmetic (expanded-form int64 distances,
-    np.argmin ties toward the lower code)."""
-    b = books  # int64 (m, k, sub); captured, ships with the UDF
-    m, _, sub = b.shape
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def assign(vecs: pd.Series) -> pd.Series:
-        x = np.stack(vecs.to_numpy()).astype(np.int64)  # (batch, dim)
-        codes = np.zeros((x.shape[0], m), dtype=np.int32)
-        for j in range(m):
-            xs = x[:, j * sub : (j + 1) * sub]
-            d2 = -2 * (xs @ b[j].T) + (b[j] * b[j]).sum(axis=1)[None, :]
-            codes[:, j] = np.argmin(d2, axis=1)
-        return pd.Series(list(codes))
+        return pd.Series(_argmin_codes(x, books)[:, 0])
 
     return assign
 
@@ -287,21 +227,22 @@ def kmeans_snapped(
     registry's k-means rows a full value-hash DuckDB oracle instead of
     a rows-only check.
 
-    Same 100 TB shape as ``kmeans``: k×dim driver-side centroid state,
-    Arrow-batched int64 matmul assignment, per-iteration shuffle of at
-    most k×dim aggregate cells; ties break toward the lower cluster id
-    and empty clusters keep their previous centroid.
+    100 TB shape (``_snapped_fit``): k×dim driver-side centroid state,
+    Arrow-batched int64 matmul assignment, per-iteration merge of at
+    most k×dim partial cells per partition; ties break toward the
+    lower cluster id and empty clusters keep their previous centroid.
     """
     assigned, _ = kmeans_snapped_fit(emb, k, iters, id_col, vec_col, scale)
     return assigned.select(id_col, "cluster")
 
 
-def _snapped_partial_sums(centroids: "np.ndarray"):
+def _snapped_partial_sums(books: "np.ndarray"):
     """Fused Lloyd update step: ONE Arrow pass per iteration assigns
-    every row (the exact ``_assign_udf_snapped`` int64 arithmetic) and
-    emits per-partition partial sums ``(cluster, pos, s, n)`` — at most
-    k x dim rows per partition, never row-level data. Replaces the
-    r15-era ``assign UDF + posexplode + groupBy`` iteration, whose
+    every row in every subspace (``_argmin_codes``) and emits
+    per-partition partial sums ``(j, cluster, pos, s, n)`` — subspace,
+    codeword, position within the subspace, coordinate sum, member
+    count: at most k x dim rows per partition, never row-level data.
+    Replaces the ``assign UDF + posexplode + groupBy`` iteration, whose
     N x dim exploded exchange and second pass over the rows were pure
     overhead (guide §2.3 aggregate-before-shuffle / §4.2: the partial
     aggregation moves INTO the same numpy pass that already holds the
@@ -309,29 +250,28 @@ def _snapped_partial_sums(centroids: "np.ndarray"):
     replaces); empty clusters emit nothing, so the caller's
     keep-previous-centroid rule is untouched — bit-identical fits,
     pinned by tests/test_clustering_kernels.py."""
-    c = centroids
-    k, dim = c.shape
-    cc = (c * c).sum(axis=1)[None, :]
+    m, k, sub = books.shape
+    offs = np.arange(m, dtype=np.int64) * k  # (j, cluster) -> j*k + cluster
 
     def fn(pdfs):
-        acc = np.zeros((k, dim), dtype=np.int64)
-        cnt = np.zeros(k, dtype=np.int64)
+        acc = np.zeros((m * k, sub), dtype=np.int64)
+        cnt = np.zeros(m * k, dtype=np.int64)
         for pdf in pdfs:
             if not len(pdf):
                 continue
             x = np.stack(pdf["v"].to_numpy()).astype(np.int64)
-            d2 = -2 * (x @ c.T) + cc
-            cl = np.argmin(d2, axis=1)
-            np.add.at(acc, cl, x)
-            cnt += np.bincount(cl, minlength=k)
+            cell = (_argmin_codes(x, books) + offs).ravel()
+            np.add.at(acc, cell, x.reshape(-1, sub))
+            cnt += np.bincount(cell, minlength=m * k)
         idx = np.nonzero(cnt)[0]
         if idx.size:
             yield pd.DataFrame(
                 {
-                    "cluster": np.repeat(idx, dim).astype(np.int32),
-                    "pos": np.tile(np.arange(dim, dtype=np.int32), idx.size),
+                    "j": np.repeat(idx // k, sub).astype(np.int32),
+                    "cluster": np.repeat(idx % k, sub).astype(np.int32),
+                    "pos": np.tile(np.arange(sub, dtype=np.int32), idx.size),
                     "s": acc[idx].ravel(),
-                    "n": np.repeat(cnt[idx], dim),
+                    "n": np.repeat(cnt[idx], sub),
                 }
             )
 
@@ -340,27 +280,25 @@ def _snapped_partial_sums(centroids: "np.ndarray"):
 
 def _assign_n2_fn(centroids: "np.ndarray"):
     """Fused final-assignment pass for the SemDeDup consumers: ONE
-    Arrow pass emits (vec_id, v, cluster, n2) — the exact
-    ``_assign_udf_snapped`` argmin arithmetic plus the exact int64
-    squared norm Σv², replacing a separate ArrowEvalPython assignment
-    AND the interpreted per-row ``aggregate(transform(v, x*x))`` fold
-    the callers used to stack on top (r17; bit-equivalence pinned in
+    Arrow pass emits (vec_id, v, cluster, n2) — the ``_argmin_codes``
+    assignment plus the exact int64 squared norm Σv², replacing a
+    separate ArrowEvalPython assignment AND the interpreted per-row
+    ``aggregate(transform(v, x*x))`` fold the callers used to stack on
+    top (r17; bit-equivalence pinned in
     tests/test_clustering_kernels.py). n2 is exact: dim · scale² =
     64e12 « 2^63."""
-    c = centroids
-    cc = (c * c).sum(axis=1)[None, :]
+    books = centroids[None]
 
     def fn(pdfs):
         for pdf in pdfs:
             if not len(pdf):
                 continue
             x = np.stack(pdf["v"].to_numpy()).astype(np.int64)
-            d2 = -2 * (x @ c.T) + cc
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "v": pdf["v"],
-                    "cluster": np.argmin(d2, axis=1).astype(np.int32),
+                    "cluster": _argmin_codes(x, books)[:, 0],
                     "n2": (x * x).sum(axis=1),
                 }
             )
@@ -368,34 +306,28 @@ def _assign_n2_fn(centroids: "np.ndarray"):
     return fn
 
 
-def kmeans_snapped_fit(
+def _snapped_fit(
     emb: DataFrame,
-    k: int = 10,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = SNAP_SCALE,
+    m: int,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    scale: int,
     k_from_count=None,
-    emit_n2: bool = False,
 ) -> tuple[DataFrame, "np.ndarray"]:
-    """The fit behind kmeans_snapped, additionally exposing the final
-    int64 centroid matrix (k × dim) — the coarse codebook IVF-ANN
-    probes against. Returns (assignments under the final centroids
-    with the quantized vector column ``v`` retained, centroids).
-
-    ``k_from_count``: optional ``n_rows -> k`` rule, evaluated against
-    the materialized quantized table (row count identical to ``emb``'s
-    by construction) — lets a k ∝ N caller (semdedup_scaled_prune)
-    derive k from the cheap post-checkpoint count instead of paying a
-    separate full scan of its planted-union plan. ``k`` is ignored
-    when it is given.
-
-    ``emit_n2``: additionally emit the exact int64 squared norm ``n2``
-    per row, fused into the same Arrow pass as the final assignment
-    (``_assign_n2_fn``) — the SemDeDup consumers otherwise pay a
-    second Python pass plus an interpreted JVM fold for it. The
-    assignment column is bit-identical either way."""
+    """The one Lloyd loop: ``iters`` integer-snapped iterations of an
+    ``m``-subspace codebook (``m = 1`` is plain k-means). Returns the
+    materialized quantized source ``(id_col, v)`` and the final int64
+    ``(m, k, dim // m)`` books. Every subspace follows the same
+    contract — first-k-by-id init, ``_argmin_codes`` assignment,
+    truncating-division updates, empty clusters frozen — so a fused
+    ``m``-subspace fit is bit-for-bit ``m`` separate fits over the
+    subvector slices (int64 sums are combination-order-independent),
+    in (iters + 1) passes over the corpus instead of m * (iters + 1).
+    ``dim`` comes from the init rows: no separate probe job."""
     from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
+        _probe_partitions,
         fan_out,
     )
 
@@ -425,20 +357,23 @@ def kmeans_snapped_fit(
     if k_from_count is not None:
         k = int(k_from_count(src.count()))  # cheap: checkpointed blocks
     init = src.orderBy(id_col).limit(k).collect()  # bounded: k vectors
-    centroids = np.array([r["v"] for r in init], dtype=np.int64)
-    dim = centroids.shape[1]
-    partial_schema = "cluster int, pos int, s long, n long"
+    if not init:
+        raise ValueError("cannot fit centroids: the input has no rows")
+    dim = len(init[0]["v"])
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sub = dim // m
+    books = np.ascontiguousarray(
+        np.array([r["v"] for r in init], dtype=np.int64)
+        .reshape(len(init), m, sub)
+        .transpose(1, 0, 2)
+    )
     # direct driver merge when the partials are small (see
     # _DIRECT_MERGE_MAX_CELLS): skips the per-iteration groupBy shuffle
     # stage; a probe failure (None) keeps the distributed merge
-    from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
-        _probe_partitions,
-    )
-
     n_parts = _probe_partitions(src)
     direct = (
-        n_parts is not None
-        and n_parts * k * dim <= _DIRECT_MERGE_MAX_CELLS
+        n_parts is not None and n_parts * books.size <= _DIRECT_MERGE_MAX_CELLS
     )
     for _ in range(iters):
         # fused update (see _snapped_partial_sums): one Arrow pass
@@ -446,28 +381,55 @@ def kmeans_snapped_fit(
         # is <= partitions x k x dim partial cells instead of N x dim
         # exploded rows
         partials = src.select("v").mapInPandas(
-            _snapped_partial_sums(centroids), partial_schema
+            _snapped_partial_sums(books),
+            "j int, cluster int, pos int, s long, n long",
         )
-        new_c = centroids.copy()
-        if direct:
-            acc: dict = {}
-            for r in partials.collect():  # bounded: the cell ceiling
-                key = (r["cluster"], r["pos"])
-                s, n = acc.get(key, (0, 0))
-                acc[key] = (s + r["s"], n + r["n"])
-            for (ci, pos), (s, n) in acc.items():
-                new_c[ci, pos] = _trunc_div(int(s), int(n))
-        else:
-            sums = (
-                partials.groupBy("cluster", "pos")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )  # bounded: k*dim rows
-            for r in sums:
-                new_c[r["cluster"], r["pos"]] = _trunc_div(
-                    int(r["s"]), int(r["n"])
-                )
-        centroids = new_c
+        if not direct:
+            partials = partials.groupBy("j", "cluster", "pos").agg(
+                F.sum("s").alias("s"), F.sum("n").alias("n")
+            )
+        acc: dict = {}
+        # bounded: the cell ceiling, or k*dim grouped cells
+        for j, ci, pos, s, n in partials.collect():
+            s0, n0 = acc.get((j, ci, pos), (0, 0))
+            acc[(j, ci, pos)] = (s0 + s, n0 + n)
+        for (j, ci, pos), (s, n) in acc.items():
+            books[j, ci, pos] = _trunc_div(int(s), int(n))
+    return src, books
+
+
+def kmeans_snapped_fit(
+    emb: DataFrame,
+    k: int = 10,
+    iters: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    scale: int = SNAP_SCALE,
+    k_from_count=None,
+    emit_n2: bool = False,
+) -> tuple[DataFrame, "np.ndarray"]:
+    """The fit behind kmeans_snapped (``_snapped_fit`` with one
+    subspace), additionally exposing the final int64 centroid matrix
+    (k × dim) — the coarse codebook IVF-ANN probes against. Returns
+    (assignments under the final centroids with the quantized vector
+    column ``v`` retained, centroids).
+
+    ``k_from_count``: optional ``n_rows -> k`` rule, evaluated against
+    the materialized quantized table (row count identical to ``emb``'s
+    by construction) — lets a k ∝ N caller (semdedup_scaled_prune)
+    derive k from the cheap post-checkpoint count instead of paying a
+    separate full scan of its planted-union plan. ``k`` is ignored
+    when it is given.
+
+    ``emit_n2``: additionally emit the exact int64 squared norm ``n2``
+    per row, fused into the same Arrow pass as the final assignment
+    (``_assign_n2_fn``) — the SemDeDup consumers otherwise pay a
+    second Python pass plus an interpreted JVM fold for it. The
+    assignment column is bit-identical either way."""
+    src, books = _snapped_fit(
+        emb, 1, k, iters, id_col, vec_col, scale, k_from_count
+    )
+    centroids = books[0]
     if emit_n2:
         return (
             src.select(id_col, "v").mapInPandas(
@@ -572,86 +534,6 @@ def within_cluster_pair_dots(
     return qv.select("cluster", "vec_id", "v", "n2").groupBy(
         "cluster"
     ).applyInPandas(fn, out_schema)
-
-
-def pq_train(
-    emb: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Product-quantization codebooks: the embedding is split into ``m``
-    contiguous subspaces and each gets its own k-centroid Lloyd fit
-    (same deterministic scheme as ``kmeans``: first-k-by-id init, empty
-    clusters frozen). Returns ``(m, k, dim // m)`` — m*k*sub floats on
-    the driver, independent of row count; the training scans are
-    column-sliced so each fit moves only its subspace."""
-    first = emb.select(vec_col).head()
-    dim = len(first[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    books = np.zeros((m, k, sub), dtype=np.float64)
-    for j in range(m):
-        sl = emb.select(
-            F.col(id_col).alias("_id"),
-            F.slice(
-                F.col(vec_col).cast("array<double>"), j * sub + 1, sub
-            ).alias("v"),
-        )
-        init = np.array(
-            [r["v"] for r in sl.orderBy("_id").limit(k).collect()],
-            dtype=np.float64,
-        )
-        books[j] = _fit_centroids(sl, init, iters)
-    return books
-
-
-def pq_encode(
-    emb: DataFrame,
-    books: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign PQ codes: per vector, the argmin centroid in each
-    subspace (ties toward the lower code, matching ``kmeans``) plus the
-    L2 reconstruction error of the quantized vector. Map-only: the
-    ``m×k×sub`` codebook ships inside the Arrow-batched UDF; nothing
-    shuffles. At 16 centroids a 64-dim float64 vector (512 B) encodes
-    to m=8 codes (4 bits each) — the 100 TB embedding-store compression
-    path, with ``err`` the per-row quality audit."""
-    m, k, sub = books.shape
-    b = books
-
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("codes", T.ArrayType(T.IntegerType())),
-                T.StructField("err", T.DoubleType()),
-            ]
-        )
-    )
-    def enc(vecs: pd.Series) -> pd.DataFrame:
-        x = np.stack(vecs.to_numpy()).astype(np.float64)
-        n = x.shape[0]
-        codes = np.zeros((n, m), dtype=np.int32)
-        recon = np.zeros_like(x)
-        for j in range(m):
-            xs = x[:, j * sub : (j + 1) * sub]
-            d2 = -2.0 * (xs @ b[j].T) + (b[j] * b[j]).sum(axis=1)[None, :]
-            cj = np.argmin(d2, axis=1)
-            codes[:, j] = cj
-            recon[:, j * sub : (j + 1) * sub] = b[j][cj]
-        err = np.sqrt(((x - recon) ** 2).sum(axis=1))
-        return pd.DataFrame({"codes": list(codes), "err": err})
-
-    src = emb.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-    return src.select(
-        id_col,
-        enc("v").alias("e"),
-    ).select(id_col, F.col("e.codes").alias("codes"), F.col("e.err").alias("err"))
 
 
 def _partial_gram_factory(dim: int, vec_col: str):
@@ -767,66 +649,18 @@ def pq_train_snapped(
     (``pq_oracle_sql``) replays it per subspace. Returns int64
     ``(m, k, dim // m)`` quantized-unit centroids.
 
-    The ``m`` subspace fits are FUSED into one Lloyd loop: the
-    quantized full vectors materialize once (localCheckpoint, the
-    kmeans_snapped_fit src discipline), the assignment UDF emits all
-    ``m`` codes per row, and one (subspace, cluster, pos) integer
-    aggregate per iteration feeds every codebook's update. Bit-for-bit
-    equal to ``m`` sequential fits — each subspace's init rows, argmin
-    inputs, and coordinate sums are unchanged, and int64 sums are
-    combination-order-independent — while running (iters + 1) passes
-    over the corpus instead of m * (iters + 1) and ~5 driver jobs
-    instead of ~m * (iters + 2): the sequential form spent more
+    The ``m`` subspace fits are the ``m``-subspace call of the one
+    Lloyd loop (``_snapped_fit``): the quantized full vectors
+    materialize once, each iteration's fused Arrow pass assigns all
+    ``m`` codes per row and emits (subspace, cluster, pos) partial
+    sums, and one merge feeds every codebook's update. Bit-for-bit
+    equal to ``m`` sequential fits (pinned by
+    tests/test_clustering.py) while running (iters + 1) passes over the
+    corpus instead of m * (iters + 1): the sequential form spent more
     wall-clock on job scheduling than on data (measured at sf0.01,
     warm session: registered-query times 12.2 -> 5.3 s
     (pq_encode_embeddings) and 13.0 -> 4.2 s (ann_pq_adc_topk))."""
-    from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
-        fan_out,
-    )
-
-    first = emb.select(vec_col).head()
-    dim = len(first[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    src = fan_out(
-        emb.select(
-            id_col,
-            F.transform(
-                F.col(vec_col),
-                lambda x: F.round(x.cast("double") * scale).cast("long"),
-            ).alias("v"),
-        )
-    ).localCheckpoint(eager=True)
-    init = src.orderBy(id_col).limit(k).collect()  # bounded: k vectors
-    books = np.zeros((m, k, sub), dtype=np.int64)
-    for j in range(m):
-        books[j] = np.array(
-            [r["v"][j * sub : (j + 1) * sub] for r in init], dtype=np.int64
-        )
-    jcol = F.floor(F.col("pos") / sub).cast("int")
-    for _ in range(iters):
-        assigned = src.withColumn(
-            "codes", _assign_codes_udf_snapped(books)("v")
-        )
-        stats = (
-            assigned.select("codes", F.posexplode("v").alias("pos", "val"))
-            .select(
-                jcol.alias("j"),
-                F.element_at("codes", jcol + 1).alias("cluster"),
-                F.pmod("pos", F.lit(sub)).alias("p"),
-                "val",
-            )
-            .groupBy("j", "cluster", "p")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )  # bounded: m*k*sub rows
-        new_b = books.copy()
-        for r in stats:
-            new_b[r["j"], r["cluster"], r["p"]] = _trunc_div(
-                int(r["s"]), int(r["n"])
-            )
-        books = new_b
+    _, books = _snapped_fit(emb, m, k, iters, id_col, vec_col, scale)
     return books
 
 
@@ -843,7 +677,7 @@ def pq_encode_snapped(
     oracle's (dist, cid) ROW_NUMBER agree), with ``ss`` the exact
     integer Σ(x - recon)² in quantized units. Map-only; the codebook
     ships inside the Arrow UDF."""
-    m, k, sub = books.shape
+    m = books.shape[0]
     b = books.astype(np.int64)
 
     @pandas_udf(
@@ -856,15 +690,8 @@ def pq_encode_snapped(
     )
     def enc(vecs: pd.Series) -> pd.DataFrame:
         x = np.stack(vecs.to_numpy()).astype(np.int64)
-        n = x.shape[0]
-        codes = np.zeros((n, m), dtype=np.int32)
-        recon = np.zeros_like(x)
-        for j in range(m):
-            xs = x[:, j * sub : (j + 1) * sub]
-            d2 = -2 * (xs @ b[j].T) + (b[j] * b[j]).sum(axis=1)[None, :]
-            cj = np.argmin(d2, axis=1)
-            codes[:, j] = cj
-            recon[:, j * sub : (j + 1) * sub] = b[j][cj]
+        codes = _argmin_codes(x, b)
+        recon = b[np.arange(m), codes].reshape(x.shape)
         ss = ((x - recon) ** 2).sum(axis=1)
         return pd.DataFrame({"codes": list(codes), "ss": ss})
 

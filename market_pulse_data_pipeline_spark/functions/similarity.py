@@ -7,6 +7,11 @@
   join touches a small fraction of vectors instead of all of them.
 - ``embedding_near_duplicates``: cosine ≥ threshold pairs through the
   same LSH bucketing (embedding-based near-dup for dedup pipelines).
+- ``ivf_ann_topk``: the one inverted-file ANN path — a coarse codebook
+  from the integer-snapped k-means fit (functions/clustering.py's one
+  Lloyd loop), an integer probe of the cells nearest the quantized
+  query, and an exact cosine re-rank of the probed cells' members
+  (``ivf_probe``, which the stress harness times on its own).
 
 Signature portability: plane components are md5-derived integers in
 [-1000, 1000] (``portable_planes``) and projections run on int64
@@ -32,6 +37,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+from market_pulse_data_pipeline_spark.functions.clustering import (
+    kmeans_snapped_fit,
+    quantize_vec_py,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -266,89 +276,60 @@ def embedding_near_duplicates(
 # --- IVF (inverted-file) ANN ---------------------------------------------------
 
 
-def ivf_build_centroids(
+# Lloyd rounds of the coarse codebook — shared with the DuckDB twin of
+# the registered ann_ivf_topk query (queries/scale_paths.py).
+IVF_ITERS = 2
+
+
+def ivf_probe(
     emb: DataFrame,
-    dim: int,
-    n_centroids: int = 16,
-    iters: int = 2,
+    assigned: DataFrame,
+    centroids: np.ndarray,
+    query_vec: list[float],
+    k: int = 10,
+    nprobe: int = 4,
     id_col: str = "vec_id",
-) -> np.ndarray:
-    """Deterministic k-means-lite codebook: init from evenly-strided
-    vectors (no RNG), then ``iters`` Lloyd rounds. Assignment runs as an
-    Arrow-batched pandas_udf (numpy matmul); the per-round centroid
-    update is a (cid, pos) groupBy-avg — a shuffle bounded by
-    n_centroids × dim rows, independent of corpus size. The codebook
-    (n_centroids × dim floats) is the ONLY data collected to the driver
-    — tiny and bounded, like the ANN query vector.
-
-    At 100 TB: train on a sample, broadcast the codebook; assignment
-    stays map-only."""
-    first = (
-        emb.orderBy(id_col)
-        .limit(n_centroids * 8)
-        .select(id_col, "embedding")
-        .collect()
+) -> DataFrame:
+    """Probe the ``nprobe`` cells whose centroids are integer-nearest to
+    the quantized query (``quantize_vec_py``, the driver twin of the
+    executor quantization; ties toward the lower cell), then exact
+    cosine re-rank of those cells' members only."""
+    eq = quantize_vec_py(query_vec)
+    dists = sorted(
+        (sum((int(c) - e) ** 2 for c, e in zip(row, eq)), cid)
+        for cid, row in enumerate(centroids)
     )
-    init = [r["embedding"] for r in first[:: max(1, len(first) // n_centroids)]]
-    centroids = np.asarray(init[:n_centroids], dtype=np.float64)
-
-    for _ in range(iters):
-        assigned = ivf_assign(emb, centroids, id_col)
-        sums = (
-            assigned.select("cid", F.posexplode("embedding").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        new = centroids.copy()
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in sums:
-            by_cid.setdefault(r.cid, {})[r.pos] = r.m
-        for cid, comp in by_cid.items():
-            new[cid] = [comp[p] for p in range(centroids.shape[1])]
-        centroids = new
-    return centroids
-
-
-def ivf_assign(emb: DataFrame, centroids: np.ndarray, id_col: str = "vec_id") -> DataFrame:
-    """Adds ``cid``: index of the nearest centroid (squared-L2) — one
-    Arrow-batched matmul per partition, map-only."""
-    cents = centroids.astype(np.float64)
-
-    @pandas_udf(T.IntegerType())
-    def assign_udf(embs: pd.Series) -> pd.Series:
-        mat = np.stack(embs.to_numpy()).astype(np.float64)
-        # argmin ||x-c||² = argmin (||c||² - 2 x·c)
-        d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (mat @ cents.T)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
-
-    return emb.withColumn("cid", assign_udf(F.col("embedding")))
+    probe = [cid for _, cid in dists[:nprobe]]
+    near = assigned.filter(F.col("cluster").isin(probe)).select(id_col)
+    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    v = F.col("embedding").cast("array<double>")
+    return (
+        emb.join(near, id_col, "left_semi")
+        .select(id_col, F.round(cosine(v, qlit), 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), id_col)
+        .limit(k)
+    )
 
 
 def ivf_ann_topk(
     emb: DataFrame,
     query_vec: list[float],
-    dim: int,
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
     id_col: str = "vec_id",
-    centroids: np.ndarray | None = None,
 ) -> DataFrame:
-    """IVF ANN: assign vectors to coarse clusters, probe only the
-    ``nprobe`` clusters nearest the query, exact cosine re-rank inside
-    them. Pass a prebuilt ``centroids`` codebook to skip training."""
-    if centroids is None:
-        centroids = ivf_build_centroids(emb, dim, n_centroids, id_col=id_col)
-    q = np.asarray(query_vec, dtype=np.float64)
-    d = (centroids * centroids).sum(axis=1) - 2.0 * (centroids @ q)
-    probe = sorted(int(i) for i in np.argsort(d)[:nprobe])
-    assigned = ivf_assign(emb, centroids, id_col)
-    near = assigned.filter(F.col("cid").isin(probe))
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col("embedding").cast("array<double>")
-    return (
-        near.select(id_col, F.round(cosine(v, qlit), 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), id_col)
-        .limit(k)
+    """IVF ANN: fit the coarse codebook with the integer-snapped
+    k-means (``kmeans_snapped_fit``, first-k-by-id init, ``IVF_ITERS``
+    Lloyd rounds; only the n_centroids x dim int64 codebook reaches
+    the driver), probe only the ``nprobe`` cells nearest the query and
+    re-rank inside them by exact cosine (``ivf_probe``). Every
+    codebook, assignment and probe decision is exact integer
+    arithmetic, so the registered ann_ivf_topk query replays it in
+    DuckDB."""
+    assigned, centroids = kmeans_snapped_fit(
+        emb, k=n_centroids, iters=IVF_ITERS, id_col=id_col
+    )
+    return ivf_probe(
+        emb, assigned, centroids, query_vec, k, nprobe, id_col
     )

@@ -796,7 +796,6 @@ def minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IVF_K = 16  # coarse centroids
-_IVF_ITERS = 2  # Lloyd rounds
 _IVF_NPROBE = 6  # probed cells
 
 
@@ -808,6 +807,9 @@ def _ivf_topk_sql() -> str:
     from market_pulse_data_pipeline_spark.functions.clustering import (  # noqa: PLC0415
         SNAP_SCALE,
         kmeans_oracle_sql,
+    )
+    from market_pulse_data_pipeline_spark.functions.similarity import (  # noqa: PLC0415
+        IVF_ITERS,
     )
 
     final = f"""
@@ -846,7 +848,7 @@ def _ivf_topk_sql() -> str:
     return kmeans_oracle_sql(
         final,
         k=_IVF_K,
-        iters=_IVF_ITERS,
+        iters=IVF_ITERS,
         dim=_EMB_DIM,
         where="WHERE vec_id <> 0",
     )
@@ -874,45 +876,22 @@ def _ivf_topk_sql() -> str:
     "re-rank to nprobe clusters.",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from market_pulse_data_pipeline_spark.functions.clustering import (  # noqa: PLC0415
-        kmeans_snapped_fit,
-        quantize_vec_py,
-    )
     from market_pulse_data_pipeline_spark.functions.similarity import (  # noqa: PLC0415
-        cosine,
+        ivf_ann_topk,
     )
 
     emb = t(spark, sf_dir, "embeddings")
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").head()
     q = [float(x) for x in qrow["embedding"]]
     others = emb.filter(F.col("vec_id") != 0)
-    # cache scoped to codebook training (iters+1 passes); released
-    # before returning rather than pinned for the session.
+    # cache scoped to codebook training; released before returning
+    # rather than pinned for the session.
     cached = others.cache()
-    assigned, centroids = kmeans_snapped_fit(
-        cached, k=_IVF_K, iters=_IVF_ITERS
+    out = ivf_ann_topk(
+        cached, q, k=10, n_centroids=_IVF_K, nprobe=_IVF_NPROBE
     )
     cached.unpersist(blocking=False)
-    # probe: integer distances from the Decimal-quantized query (the
-    # driver twin of the executor quantization) to the final centroids
-    eq = quantize_vec_py(q)
-    dists = sorted(
-        (
-            sum((int(c) - e) ** 2 for c, e in zip(row, eq)),
-            cid,
-        )
-        for cid, row in enumerate(centroids)
-    )
-    probe = [cid for _, cid in dists[:_IVF_NPROBE]]
-    near = assigned.filter(F.col("cluster").isin(probe)).select("vec_id")
-    qlit = F.array(*[F.lit(float(x)) for x in q])
-    v = F.col("embedding").cast("array<double>")
-    return (
-        others.join(near, "vec_id", "left_semi")
-        .select("vec_id", F.round(cosine(v, qlit), 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(10)
-    )
+    return out
 
 
 @register(

@@ -1,10 +1,12 @@
 """Exactness twins for functions/clustering.py.
 
-K-means: the Spark fit must produce IDENTICAL assignments to a pure-
-numpy replay of the same deterministic algorithm (first-k init, ties
-toward lower cluster id, 5 Lloyd iterations). PCA: projections must
-match a numpy eigendecomposition of the same covariance up to float
-tolerance (partial-sum order differs between engines).
+K-means: the snapped Spark fit must produce IDENTICAL assignments to a
+pure-integer numpy replay of the same deterministic algorithm (first-k
+init, ties toward lower cluster id, truncating-division updates), and
+the fused PQ fit must equal per-subspace k-means fits bit for bit.
+PCA: projections must match a numpy eigendecomposition of the same
+covariance up to float tolerance (partial-sum order differs between
+engines).
 """
 
 from __future__ import annotations
@@ -13,9 +15,12 @@ import numpy as np
 import pytest
 
 from market_pulse_data_pipeline_spark.functions.clustering import (
-    kmeans,
+    SNAP_SCALE,
+    kmeans_snapped,
+    kmeans_snapped_fit,
     pca_components,
     pca_project,
+    pq_train_snapped,
 )
 from market_pulse_data_pipeline_spark.sources.tables import load_table
 
@@ -35,32 +40,10 @@ def emb_np(emb):
     return ids, x
 
 
-def numpy_kmeans(x: np.ndarray, k: int, iters: int) -> np.ndarray:
-    c = x[:k].copy()
-    for _ in range(iters):
-        d2 = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        a = np.argmin(d2, axis=1)
-        for ci in range(k):
-            if (a == ci).any():
-                c[ci] = x[a == ci].mean(axis=0)
-    d2 = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-    return np.argmin(d2, axis=1)
-
-
-def test_kmeans_matches_numpy_exactly(spark, emb, emb_np):
-    ids, x = emb_np
-    expected = numpy_kmeans(x, k=5, iters=3)
-    got_rows = kmeans(emb, k=5, iters=3).orderBy("vec_id").collect()
-    got = np.array([r.cluster for r in got_rows])
-    assert np.array_equal(ids, np.array([r.vec_id for r in got_rows]))
-    # identical argmin over float64 distances; mean reassociation between
-    # Spark and numpy can flip an exact boundary tie, but the synthetic
-    # clusters are well separated — require full equality.
-    assert np.array_equal(got, expected)
-
-
 def test_kmeans_all_clusters_nonempty(emb):
-    sizes = kmeans(emb, k=5, iters=3).groupBy("cluster").count().collect()
+    sizes = (
+        kmeans_snapped(emb, k=5, iters=3).groupBy("cluster").count().collect()
+    )
     assert len(sizes) == 5
     assert all(r["count"] > 0 for r in sizes)
 
@@ -94,11 +77,6 @@ def test_kmeans_snapped_matches_int_replay_exactly(spark, emb, emb_np):
     replay — no float tolerance anywhere (this is the property that
     lets embedding_kmeans_clusters/_sizes carry a DuckDB value-hash
     oracle)."""
-    from market_pulse_data_pipeline_spark.functions.clustering import (
-        SNAP_SCALE,
-        kmeans_snapped,
-    )
-
     ids, x = emb_np
     expected = numpy_kmeans_snapped(x, k=5, iters=3, scale=SNAP_SCALE)
     got_rows = kmeans_snapped(emb, k=5, iters=3).orderBy("vec_id").collect()
@@ -131,58 +109,20 @@ def test_pca_projection_variance_order(emb, emb_np):
     assert p1.var() >= p2.var()
 
 
-def numpy_pq(x: np.ndarray, m: int, k: int, iters: int):
-    sub = x.shape[1] // m
-    books = np.zeros((m, k, sub))
-    codes = np.zeros((x.shape[0], m), dtype=np.int64)
-    for j in range(m):
-        xs = x[:, j * sub : (j + 1) * sub]
-        c = xs[:k].copy()
-        for _ in range(iters):
-            d2 = ((xs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(d2, axis=1)
-            for ci in range(k):
-                if (a == ci).any():
-                    c[ci] = xs[a == ci].mean(axis=0)
-        books[j] = c
-        d2 = ((xs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        codes[:, j] = np.argmin(d2, axis=1)
-    return books, codes
-
-
-def test_pq_matches_numpy_exactly(spark, emb, emb_np):
-    from market_pulse_data_pipeline_spark.functions.clustering import (
-        pq_encode,
-        pq_train,
-    )
-
-    ids, x = emb_np
-    m, k, iters = 8, 16, 3
-    books = pq_train(emb, m=m, k=k, iters=iters)
-    ref_books, ref_codes = numpy_pq(x, m, k, iters)
-    assert np.allclose(books, ref_books)
-    got = {
-        r.vec_id: (list(r.codes), r.err)
-        for r in pq_encode(emb, books).collect()
-    }
-    order = {v: i for i, v in enumerate(ids)}
-    recon_dim = x.shape[1] // m
-    for vid, (codes, err) in got.items():
-        i = order[vid]
-        assert codes == list(ref_codes[i]), vid
-        recon = np.concatenate(
-            [ref_books[j][ref_codes[i, j]] for j in range(m)]
-        )
-        assert abs(err - np.sqrt(((x[i] - recon) ** 2).sum())) < 1e-9
-    # compression accounting: m codes of ceil(log2 k) bits vs dim doubles
-    assert m * 4 < x.shape[1] * 64
-
-
 def test_pq_rejects_indivisible_dim(spark, emb):
-    from market_pulse_data_pipeline_spark.functions.clustering import pq_train
-
     with pytest.raises(ValueError):
-        pq_train(emb, m=7)
+        pq_train_snapped(emb, m=7)
+
+
+def test_snapped_fits_reject_empty_input(spark, emb):
+    # both entry points of the one Lloyd loop take dim from the init
+    # rows, so an empty frame must fail with one clear ValueError (not
+    # an IndexError on the centroid shape or a TypeError on head())
+    empty = emb.limit(0)
+    with pytest.raises(ValueError, match="no rows"):
+        kmeans_snapped_fit(empty, k=5, iters=1)
+    with pytest.raises(ValueError, match="no rows"):
+        pq_train_snapped(empty, m=8, k=4, iters=1)
 
 
 def test_pq_adc_recall(spark, emb, emb_np):
@@ -209,11 +149,6 @@ def test_pq_snapped_fused_equals_sequential_subspace_fits(spark, emb):
     # independent and each subspace's init/argmin inputs are unchanged,
     # so any divergence is a bug in the fusion
     from pyspark.sql import functions as F
-
-    from market_pulse_data_pipeline_spark.functions.clustering import (
-        kmeans_snapped_fit,
-        pq_train_snapped,
-    )
 
     m, k, iters = 8, 16, 3
     fused = pq_train_snapped(emb, m=m, k=k, iters=iters)

@@ -4,9 +4,10 @@ Two optimizations changed operator INTERNALS while the oracle contract
 stayed byte-identical; these pins make the equivalence claims loud:
 
 1. ``_snapped_partial_sums`` — the fused Lloyd update (one Arrow pass
-   assigning + partially summing) must produce the same per-cluster
-   sums/counts, hence the same centroids, as the r15-era
-   assign-UDF + posexplode + groupBy path it replaced.
+   assigning + partially summing, keyed by subspace, cluster and
+   position) must produce the same per-cluster sums/counts, hence the
+   same centroids, as the r15-era assign-UDF + posexplode + groupBy
+   path it replaced.
 2. ``within_cluster_pair_dots`` — the grouped int64-matmul pair kernel
    must emit a SUPERSET of the exact-threshold pairs (its float64
    screen may only over-include), and after the callers' unchanged
@@ -66,8 +67,8 @@ def test_fused_lloyd_update_matches_explode_groupby(spark):
         for r in (
             src.select("v")
             .mapInPandas(
-                _snapped_partial_sums(centroids),
-                "cluster int, pos int, s long, n long",
+                _snapped_partial_sums(centroids[None]),
+                "j int, cluster int, pos int, s long, n long",
             )
             .groupBy("cluster", "pos")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
@@ -94,6 +95,12 @@ def test_direct_merge_matches_grouped_merge(spark, monkeypatch):
     rows_g = {r["vec_id"]: r["cluster"] for r in a_g.collect()}
     rows_d = {r["vec_id"]: r["cluster"] for r in a_d.collect()}
     assert rows_g == rows_d
+    # the m-subspace call of the same loop: PQ books merged either way
+    monkeypatch.setattr(cl, "_DIRECT_MERGE_MAX_CELLS", 0)
+    b_g = cl.pq_train_snapped(emb, m=8, k=16, iters=2)
+    monkeypatch.setattr(cl, "_DIRECT_MERGE_MAX_CELLS", 1 << 20)
+    b_d = cl.pq_train_snapped(emb, m=8, k=16, iters=2)
+    assert np.array_equal(b_g, b_d)
 
 
 def test_emit_n2_matches_assign_udf_plus_fold(spark):

@@ -138,7 +138,7 @@ def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
     full = [
         (r.vec_id, r.cosine)
         for r in ivf_ann_topk(
-            others, q, dim=len(q), k=10, n_centroids=8, nprobe=8
+            others, q, k=10, n_centroids=8, nprobe=8
         ).collect()
     ]
     assert full == exact
@@ -154,7 +154,7 @@ def test_ivf_probe_recall(spark, sf_dir):
     approx = {
         r.vec_id
         for r in ivf_ann_topk(
-            others, q, dim=len(q), k=10, n_centroids=16, nprobe=6
+            others, q, k=10, n_centroids=16, nprobe=6
         ).collect()
     }
     recall = len(exact & approx) / 10

@@ -229,13 +229,20 @@ def main() -> int:
     )
 
     # k-means shape: 2 Lloyd iterations over multiplied embeddings —
-    # linear in rows (assignment map-only, update shuffle is k×dim cells)
-    from market_pulse_data_pipeline_spark.functions.clustering import kmeans
+    # linear in rows (assignment map-only, update merges k×dim cells).
+    # kmeans_snapped runs the fit eagerly, so the stage time spans the
+    # call (fit) plus run()'s pass (final assignment).
+    if only is None or "kmeans_2iter" in only:
+        from market_pulse_data_pipeline_spark.functions.clustering import (
+            kmeans_snapped,
+        )
 
-    emb = mat(multiplied(
-        load_table(spark, args.sf, "embeddings"), args.mult, ["vec_id"]
-    ), "embeddings")
-    run("kmeans_2iter", kmeans(emb, k=8, iters=2))
+        emb = mat(multiplied(
+            load_table(spark, args.sf, "embeddings"), args.mult, ["vec_id"]
+        ), "embeddings")
+        t0_km = time.time()
+        run("kmeans_2iter", kmeans_snapped(emb, k=8, iters=2))
+        timings["kmeans_2iter"] = round(time.time() - t0_km, 2)
 
     # prefix-filtered exact similarity join (queries/dedup.py): only
     # each doc's rarest shingles enter the self-join, so boilerplate
@@ -608,10 +615,10 @@ def main() -> int:
     if only is None or "ann_ivf_probe" in only:
         from market_pulse_data_pipeline_spark.functions.clustering import (
             kmeans_snapped_fit,
-            quantize_vec_py,
         )
         from market_pulse_data_pipeline_spark.functions.similarity import (
-            cosine,
+            IVF_ITERS,
+            ivf_probe,
         )
 
         emb_base = load_table(spark, args.sf, "embeddings")
@@ -621,24 +628,12 @@ def main() -> int:
             emb_base.filter(F.col("vec_id") != 0), args.mult, ["vec_id"]
         ), "embeddings_ivf").cache()
         t0_ivf = time.time()
-        assigned, centroids = kmeans_snapped_fit(emb_i, k=16, iters=2)
+        assigned, centroids = kmeans_snapped_fit(emb_i, k=16, iters=IVF_ITERS)
         timings["ann_ivf_fit"] = round(time.time() - t0_ivf, 2)
         rows["ann_ivf_fit"] = len(centroids)
-        eq = quantize_vec_py(qvec)
-        dists = sorted(
-            (sum((int(c) - e) ** 2 for c, e in zip(row, eq)), cid)
-            for cid, row in enumerate(centroids)
-        )
-        probe = [cid for _, cid in dists[:6]]
-        near = assigned.filter(F.col("cluster").isin(probe)).select("vec_id")
-        qlit = F.array(*[F.lit(float(x)) for x in qvec])
-        v = F.col("embedding").cast("array<double>")
         run(
             "ann_ivf_probe",
-            emb_i.join(near, "vec_id", "left_semi")
-            .select("vec_id", F.round(cosine(v, qlit), 6).alias("cosine"))
-            .orderBy(F.col("cosine").desc(), "vec_id")
-            .limit(10),
+            ivf_probe(emb_i, assigned, centroids, qvec, k=10, nprobe=6),
         )
         emb_i.unpersist(blocking=False)
 
