@@ -127,6 +127,8 @@ def main() -> None:
     # parse (BENCH_r14 "parsed": null — VERDICT r14 item 1). The
     # self-evidencing detail stays machine-readable on its own line;
     # the summary line is a few hundred bytes and always fits the tail.
+    # It names the resolved master, the cores Spark scheduled on and the
+    # data directory, so a reader can tell which harness produced it.
     print(
         json.dumps(
             {
@@ -144,6 +146,9 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf else None,
+                "sf_dir": sf_dir,
+                "master": spark.sparkContext.master,
+                "cores": spark.sparkContext.defaultParallelism,
             }
         )
     )

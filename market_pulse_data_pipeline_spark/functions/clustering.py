@@ -328,6 +328,7 @@ def _snapped_fit(
     ``dim`` comes from the init rows: no separate probe job."""
     from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
         _probe_partitions,
+        fan_in,
         fan_out,
     )
 
@@ -354,6 +355,11 @@ def _snapped_fit(
     # a long session running many registered queries cannot accumulate
     # pinned storage.
     src = src.localCheckpoint(eager=True)
+    # fan_in AFTER the checkpoint (which keeps the plan's size
+    # estimate): the JVM quantisation keeps fan_out's spread, while
+    # every Python pass below reads one _ARROW_TASK_BYTES chunk per
+    # task — before it, fan_out's exchange would feed a coalesce
+    src = fan_in(src)
     if k_from_count is not None:
         k = int(k_from_count(src.count()))  # cheap: checkpointed blocks
     init = src.orderBy(id_col).limit(k).collect()  # bounded: k vectors

@@ -25,7 +25,6 @@ n-gram Jaccard (queries/dedup.py) on planted near-duplicates.
 
 from __future__ import annotations
 
-import os
 import random
 
 import numpy as np
@@ -73,18 +72,30 @@ def _probe_partitions(df: DataFrame) -> int | None:
 # estimate — for a parquet scan, compressed file bytes). Round-17 fix
 # for the fan-out over-spread VERDICT r16 item 4 names: spreading a
 # sub-MB input to defaultParallelism partitions makes every downstream
-# Python/Arrow stage pay one worker+serializer setup PER PARTITION
-# (~15 ms each), which at sf0.1 made the 32-core run SLOWER than the
-# 8-core run on six benched queries (scaling ratios 0.66-0.80). The
-# floor is scale-adaptive, not local-tuned: any input past
-# cores x 256 KiB (a few MB locally, trivially true at 100 TB) still
-# spreads to the full parallelism, and on a real many-split corpus the
-# no-op contract short-circuits before the estimate is even read.
-# Overridable for cluster profiles where scan bytes expand much more
-# than ~4x in memory.
-_FAN_CHUNK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_CHUNK_BYTES", str(256 * 1024))
-)
+# Python/Arrow stage pay one Python worker task PER PARTITION, which at
+# sf0.1 made the 32-core run SLOWER than the 8-core run on six benched
+# queries (scaling ratios 0.66-0.80). That per-task cost is ~0.2 s of
+# worker CPU (median of 8 runs, 16 identity mapInPandas tasks against
+# 1, local[4], CPython 3.11): PySpark's worker calls
+# ``importlib.invalidate_caches()`` on every task, and each of its
+# zipimporters then re-reads the pyspark.zip directory. The floor is
+# scale-adaptive, not local-tuned: any input past cores x 256 KiB
+# (a few MB locally, trivially true at 100 TB) still spreads to the
+# full parallelism, and on a real many-split corpus the no-op contract
+# short-circuits before the estimate is even read.
+_FAN_CHUNK_BYTES = 256 * 1024
+
+# Input bytes (optimizer estimate) per Python task for the Arrow
+# kernels ``fan_in`` sizes: the chunk whose compute outweighs the
+# ~0.2 s fixed cost of a Python worker task (see _FAN_CHUNK_BYTES).
+# Measured on 4 cores, one task, worker CPU above that fixed cost: the
+# Lloyd kernels run 18 MB/s (fused final assignment) to 55 MB/s
+# (partial sums) of estimated input, so 0.2 s x 18 MB/s ~ 4 MiB. The
+# MinHash kernel runs 0.6 MB/s of ITS estimate (the estimate counts a
+# hash array as one element), so a 4 MiB MinHash chunk is ~7 s of
+# CPU: it pays its fixed cost many times over and spreads less than
+# its own break-even would.
+_ARROW_TASK_BYTES = 4 * 1024 * 1024
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -143,6 +154,25 @@ def fan_out(df: DataFrame, dense: bool = False) -> DataFrame:
     n_parts = _probe_partitions(df)
     if n_parts is not None and n_parts < target:
         return df.repartition(target)
+    return df
+
+
+def fan_in(df: DataFrame) -> DataFrame:
+    """Narrowing twin of ``fan_out`` for the input of a Python/Arrow
+    kernel: coalesce an over-partitioned input to
+    ``ceil(size / _ARROW_TASK_BYTES)`` partitions, so every Python task
+    gets a chunk whose compute outweighs its fixed cost. ``coalesce``
+    is narrow — it never adds an exchange — and the target is not
+    capped by the parallelism, so a large input (a real many-split
+    corpus) passes through untouched, as does any input when either
+    probe is unavailable."""
+    size = _plan_size_bytes(df)
+    n_parts = _probe_partitions(df)
+    if size is None or n_parts is None:
+        return df
+    target = max(1, -(-size // _ARROW_TASK_BYTES))
+    if n_parts > target:
+        return df.coalesce(target)
     return df
 
 
@@ -283,7 +313,9 @@ def minhash_signatures_from_hashes(
     test_signature_kernel_matches_jvm_expression). The kernel
     processes each Arrow batch in row chunks
     bounded by ``_SIG_CHUNK_ELEMS`` projected elements, so peak
-    memory per task is ~64 MB regardless of batch size."""
+    memory per task is ~64 MB regardless of batch size. A small
+    over-partitioned input runs as ``fan_in`` chunks: one Python task
+    per ``_ARROW_TASK_BYTES`` of estimated input."""
     params = _perm_params(num_perm, seed)
     a_vec = np.array([p[0] for p in params], dtype=np.int64)[:, None]
     b_vec = np.array([p[1] for p in params], dtype=np.int64)[:, None]
@@ -332,7 +364,7 @@ def minhash_signatures_from_hashes(
         flush()
         return pd.Series(out)
 
-    return hashes.select("doc_id", _sig(hash_col).alias("sig"))
+    return fan_in(hashes).select("doc_id", _sig(hash_col).alias("sig"))
 
 
 def minhash_signatures_maponly(

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
+
 # Crossover for adaptive_prefix_sum: at or below this row count the
 # serial single-partition window WINS — the two-phase form costs a
 # localCheckpoint materialization, a totals job, and an offset join,
@@ -130,7 +132,8 @@ def partitioned_prefix_sum(
             else running + (row["_total"] or 0)
         )
     spark = df.sparkSession
-    offset_df = spark.createDataFrame(
+    offset_df = local_frame(
+        spark,
         [(pid, None if off is None else str(off)) for pid, off in offsets],
         "_pid int, _offset string",
     ).select("_pid", F.col("_offset").cast(dec).alias("_offset"))

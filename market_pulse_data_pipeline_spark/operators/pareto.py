@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
+
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
@@ -119,7 +121,7 @@ def skyline_2d(
             T.StructField("_sk_carry", gain_type, True),
         ]
     )
-    offset_df = spark.createDataFrame(list(offsets), offset_schema)
+    offset_df = local_frame(spark, offsets, offset_schema)
     # greatest() skips NULLs: exactly the null-aware max of the local
     # strictly-cheaper running max and the earlier-ranges carry-in
     return (

@@ -22,6 +22,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 _VOCAB_K = 200
 
@@ -325,7 +326,8 @@ def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     merges = bpe_train(docs, n_merges=8)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, l, r, n) for i, (l, r, n) in enumerate(merges)],
         "merge_rank int, left string, right string, pair_count long",
     )

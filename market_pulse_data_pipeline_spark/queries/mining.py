@@ -27,6 +27,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 # --------------------------------------------------------------------------
 # market-basket association: support / confidence / lift
@@ -687,8 +688,8 @@ def graph_bfs_k_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
     sym = sym.localCheckpoint()
-    dist = spark.createDataFrame(
-        [(_BFS_SEED, 0)], "node bigint, dist int"
+    dist = local_frame(
+        spark, [(_BFS_SEED, 0)], "node bigint, dist int"
     ).localCheckpoint()
     frontier = dist.select("node")
     for hop in range(1, _BFS_HOPS + 1):

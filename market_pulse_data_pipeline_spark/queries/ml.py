@@ -36,6 +36,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 _DIM = 64
 _K = 10
@@ -355,7 +356,8 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x) for x in emb.orderBy("vec_id").head()["embedding"]
     ]  # deterministic probe: first vector by id (bounded collect)
     eq = quantize_vec_py(q)
-    tbl = spark.createDataFrame(
+    tbl = local_frame(
+        spark,
         [
             (
                 j,

@@ -23,6 +23,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 # Gopher-style bounds (arbitrary but fixed; the shape is the point).
 _MIN_WORDS = 20
@@ -487,8 +488,10 @@ def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         digit.alias("digit")
     )
     obs = digits.groupBy("digit").agg(F.count(F.lit(1)).alias("n_obs"))
-    expected = spark.createDataFrame(
-        [(d, p) for d, p in enumerate(_BENFORD_P, 1)], "digit int, p double"
+    expected = local_frame(
+        spark,
+        [(d, p) for d, p in enumerate(_BENFORD_P, 1)],
+        "digit int, p double",
     )
     total = digits.agg(F.count(F.lit(1)).alias("n"))
     exp_n = F.col("p") * F.col("n")

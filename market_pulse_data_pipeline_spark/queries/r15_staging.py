@@ -52,6 +52,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 # --------------------------------------------------------------------
 # softdedup_commonness_reweight
@@ -413,7 +414,7 @@ def domain_suffix_optout_filter(
     exploded = doms.select(
         "doc_id", "domain", F.posexplode(suffixes).alias("pos", "sfx")
     )
-    rules = spark.createDataFrame(_OO_RULES, "rule string, kind string")
+    rules = local_frame(spark, _OO_RULES, "rule string, kind string")
     matches = (
         exploded.join(
             F.broadcast(rules),

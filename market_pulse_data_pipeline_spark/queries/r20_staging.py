@@ -47,6 +47,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     register,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 # this sessionizer's gap parameter: 12 h (gap is a per-pipeline knob —
 # the registered 30-min `sessionization` models interactive sessions;
@@ -148,9 +149,10 @@ def trigram_substring_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(t(spark, sf_dir, "documents").select("doc_id", "text"))
     pat_tris = {p: _trigrams(p) for p in _TG_PATTERNS}
     all_tris = sorted({g for ts_ in pat_tris.values() for g in ts_})
-    ptri = spark.createDataFrame(
+    ptri = local_frame(
+        spark,
         [(p, g) for p, ts_ in pat_tris.items() for g in set(ts_)],
-        ["pattern", "tri"],
+        "pattern string, tri string",
     )
     pn = {p: len(set(ts_)) for p, ts_ in pat_tris.items()}
     tri_expr = F.transform(
@@ -178,8 +180,8 @@ def trigram_substring_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = cand.join(
         t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     ).filter(F.expr("contains(text, pattern)"))
-    pats = spark.createDataFrame(
-        [(p,) for p in _TG_PATTERNS], ["pattern"]
+    pats = local_frame(
+        spark, [(p,) for p in _TG_PATTERNS], "pattern string"
     )
     c_agg = cand.groupBy("pattern").agg(
         F.count(F.lit(1)).cast("long").alias("n_c")

@@ -47,6 +47,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 
 # --------------------------------------------------------------------
@@ -373,13 +374,14 @@ def _gz_oracle() -> str:
 def gazetteer_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     ws_docs = docs.select("doc_id", F.split("text", " ").alias("ws"))
-    ptok = spark.createDataFrame(
+    ptok = local_frame(
+        spark,
         [
             (p, tok, off, len(p.split(" ")))
             for p in _GZ_PHRASES
             for off, tok in enumerate(p.split(" "))
         ],
-        ["phrase", "tok", "off", "plen"],
+        "phrase string, tok string, off bigint, plen bigint",
     )
     # df only for the gazetteer's own token vocabulary (r17): the
     # anchor selection joins tdf INNER on tok, so non-phrase tokens can

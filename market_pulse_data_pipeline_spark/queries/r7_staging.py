@@ -68,6 +68,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 # --------------------------------------------------------------------
 # semdedup_prune
@@ -490,8 +491,8 @@ def kcenter_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks.append((rank, row["vec_id"], int(row["mind"])))
         selected.append(list(row["v"]))
         sel_ids.append(row["vec_id"])
-    spark_out = spark.createDataFrame(
-        picks, "rank int, vec_id long, d2_at_pick long"
+    spark_out = local_frame(
+        spark, picks, "rank int, vec_id long, d2_at_pick long"
     )
     return spark_out.orderBy("rank")
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from market_pulse_data_pipeline_spark.functions.scalars import week_start
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 from market_pulse_data_pipeline_spark.operators.merge import (
     merge_last_write_wins,
     upsert_by_key,
@@ -463,9 +464,7 @@ def qc_accepted_values_violations(spark: SparkSession, sf_dir: str) -> DataFrame
     res = check_accepted_values(
         ev, "events", "event_type", ["click", "view", "purchase", "signup"]
     )
-    return spark.createDataFrame(
-        [(res.violations,)], "violation_count bigint"
-    )
+    return local_frame(spark, [(res.violations,)], "violation_count bigint")
 
 
 @register(

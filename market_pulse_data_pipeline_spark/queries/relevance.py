@@ -29,6 +29,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 # Fixed BM25 constants (Robertson/Sparck Jones defaults) and a fixed
 # 3-term query drawn from the fixture vocabulary.
@@ -360,7 +361,8 @@ def ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [
             (qid, term)
             for qid, terms in _NDCG_QUERIES.items()

@@ -44,6 +44,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 _PLANT_OFFSET = 1_000_000
 
@@ -697,7 +698,8 @@ def ann_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).count()
     n_total = others.count()
     n_matched = exact.join(approx, "vec_id", "left_semi").count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 k,

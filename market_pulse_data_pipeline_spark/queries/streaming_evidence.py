@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from market_pulse_data_pipeline_spark.queries.common import register
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 # Per-process scratch root — same pattern as market_pulse_end_to_end:
 # the oracle f-string below and the Spark function share the module
@@ -405,7 +406,8 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     "CASE mapping.",
 )
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             ("click", "engagement"),
             ("view", "engagement"),

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from market_pulse_data_pipeline_spark.schemas import ALPHAVANTAGE_DOC_SCHEMA
 from market_pulse_data_pipeline_spark.functions.scalars import normalize_symbol_col
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 
 
 def write_landing_doc(landing_dir: str, key: str, doc: dict) -> str:
@@ -50,7 +51,7 @@ def read_landing_json(spark: SparkSession, landing_dir: str) -> DataFrame:
     except FileNotFoundError:
         has_files = False
     if not has_files:
-        return spark.createDataFrame([], ALPHAVANTAGE_DOC_SCHEMA)
+        return local_frame(spark, [], ALPHAVANTAGE_DOC_SCHEMA)
     # Directory path + pathGlobFilter instead of a "*.json" glob string:
     # Spark stats a glob path literally in FileStreamSink.hasMetadata and
     # logs a (benign but noisy) FileNotFoundException stack trace.

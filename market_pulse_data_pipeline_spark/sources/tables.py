@@ -7,10 +7,15 @@ column pruning at the scan, so loaders stay plain ``spark.read.parquet``
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+from collections.abc import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from market_pulse_data_pipeline_spark.schemas import TESTDATA_TABLES
 
@@ -58,6 +63,32 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
         # naive value as the same UTC instant — no epoch shift
         df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | T.StructType
+) -> DataFrame:
+    """A driver-built table (rows as tuples in ``schema`` column order;
+    ``schema`` a DDL string or a StructType) as a ``LocalTableScan``.
+
+    The package's only ``createDataFrame`` call. A Python list goes
+    through ``PythonRDD`` and costs one Python worker task per
+    ``defaultParallelism`` slice when the table is scanned; an Arrow
+    table becomes a local relation on the driver and runs no Python
+    task at all. Top-level timestamp values follow the list path's
+    rule: a naive ``datetime`` is local time."""
+    if not isinstance(schema, T.StructType):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = []
+    for i, (field, arrow_field) in enumerate(zip(schema.fields, arrow)):
+        vals = [r[i] for r in rows]
+        if isinstance(field.dataType, T.TimestampType):
+            vals = [v if v is None else v.astimezone(dt.timezone.utc) for v in vals]
+        cols.append(pa.array(vals, type=arrow_field.type))
+    table = pa.Table.from_arrays(cols, schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

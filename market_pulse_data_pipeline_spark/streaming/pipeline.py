@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from market_pulse_data_pipeline_spark.operators.qc import QCResult, run_reference_suite
 from market_pulse_data_pipeline_spark.pipeline import build_runner
 from market_pulse_data_pipeline_spark.schemas import RAW_ALPHAVANTAGE_SCHEMA
+from market_pulse_data_pipeline_spark.sources.tables import local_frame
 from market_pulse_data_pipeline_spark.streaming.ingest import stream_landing_to_bronze
 
 
@@ -49,7 +50,7 @@ def run_incremental(
     else:
         # empty landing: the availableNow stream produced no batch and
         # bronze was never written
-        raw = spark.createDataFrame([], RAW_ALPHAVANTAGE_SCHEMA)
+        raw = local_frame(spark, [], RAW_ALPHAVANTAGE_SCHEMA)
     runner = build_runner(spark, warehouse_dir)
     tables = runner.run({"raw_alphavantage": raw})
     qc = run_reference_suite(

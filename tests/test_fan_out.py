@@ -124,3 +124,47 @@ def test_fan_out_by_degrades_to_noop_without_a_probe(spark, monkeypatch):
     monkeypatch.setattr(d, "_probe_partitions", lambda df: None)
     narrow = spark.range(100).coalesce(1)
     assert d.fan_out_by(narrow, "id") is narrow
+
+
+def test_fan_in_narrows_a_small_over_partitioned_input(spark):
+    from market_pulse_data_pipeline_spark.functions.dedup import fan_in
+
+    wide = spark.range(1000).repartition(8)  # ~8 KB estimate
+    narrow = fan_in(wide)
+    assert narrow.rdd.getNumPartitions() == 1
+    assert sorted(narrow.collect()) == sorted(wide.collect())
+
+
+def test_fan_in_is_a_noop_on_a_large_input(spark):
+    import market_pulse_data_pipeline_spark.functions.dedup as d
+
+    # 4M longs -> ~32 MB estimate: more chunks than partitions
+    wide = spark.range(4_000_000).repartition(4)
+    assert d._plan_size_bytes(wide) > 4 * d._ARROW_TASK_BYTES
+    assert d.fan_in(wide) is wide
+
+
+def test_fan_in_degrades_to_noop_without_a_probe(spark, monkeypatch):
+    import market_pulse_data_pipeline_spark.functions.dedup as d
+
+    wide = spark.range(100).repartition(4)
+    with monkeypatch.context() as m:
+        m.setattr(d, "_probe_partitions", lambda df: None)
+        assert d.fan_in(wide) is wide
+    with monkeypatch.context() as m:
+        m.setattr(d, "_plan_size_bytes", lambda df: None)
+        assert d.fan_in(wide) is wide
+
+
+def test_fan_in_adds_no_exchange(spark):
+    from market_pulse_data_pipeline_spark.functions.dedup import fan_in
+
+    def exchanges(df):
+        return df._jdf.queryExecution().executedPlan().toString().count(
+            "Exchange"
+        )
+
+    wide = spark.range(1000).repartition(8).selectExpr("id * 2 AS v")
+    narrow = fan_in(wide)
+    assert narrow is not wide
+    assert exchanges(narrow) == exchanges(wide) == 1
