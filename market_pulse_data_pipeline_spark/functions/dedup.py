@@ -1,26 +1,32 @@
 """Scale-path near-duplicate detection: MinHash+LSH and SimHash.
 
-Shingling and hashing are DataFrame/Column pipelines — the shingle
-hash is JVM-side xxhash64, banding/verification are JVM joins and
-array ops. The one deliberate exception is the 64-permutation min fold
-in ``minhash_signatures_from_hashes``: JVM higher-order lambdas run
-interpreted (outside whole-stage codegen), so that fold is an
-Arrow-batched exact-int64 numpy kernel instead (measured 4x on the
-signature stage, 1.42 -> 0.36 s over the cached sf0.1 hash arrays;
-arithmetic bit-identical, see the function doc).
+The MinHash layer is three steps that every MinHash query shares:
+``shingle_hashes`` (word n-grams hashed to one int64 array per doc,
+JVM-side), ``minhash_signatures`` (the permutation-min kernel) and
+``band_entries`` (one row per band, keyed by the raw signature slice).
+Banding and verification are JVM joins and array ops. The one
+deliberate exception is the permutation min fold in
+``minhash_signatures``: JVM higher-order lambdas run interpreted
+(outside whole-stage codegen), so that fold is an Arrow-batched
+exact-int64 numpy kernel instead (measured 4x on the signature stage,
+1.42 -> 0.36 s over the cached sf0.1 hash arrays; arithmetic
+bit-identical, see the function doc).
 
 Design for 100 TB:
-- shingling + signature: narrow (one shuffle on doc_id for the
-  min-aggregation).
-- LSH banding: candidate generation is a self-join bucketed by
-  (band_index, band_hash) — only docs that collide in a band are ever
+- shingling + signature: map-only — text → hash array → signature is
+  one projection plus the Arrow kernel, with no shingle ever exploded
+  or shuffled.
+- LSH banding: candidate generation is a join bucketed by
+  (band, signature slice) — only docs that collide in a band are ever
   paired, so the pair count stays near-linear instead of quadratic.
 - verification: estimated Jaccard = fraction of matching minhash
   components; optionally re-check exact Jaccard on the candidate set.
 
-The signature hash is engine-specific (xxhash64), so these register as
-rows-only driver checks; correctness is pytest-verified against exact
-n-gram Jaccard (queries/dedup.py) on planted near-duplicates.
+The shingle hash is xxhash64 (engine-specific) on the scale path;
+``portable=True`` swaps in the md5-derived ``portable_hash60``, and
+since the kernel and the raw-slice band key replay exactly in DuckDB
+(``_minhash_sql``), the portable queries carry full value-hash
+oracles.
 """
 
 from __future__ import annotations
@@ -212,110 +218,104 @@ def _perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def word_shingles(
-    docs: DataFrame, text_col: str = "text", n: int = 3, distinct: bool = True
-) -> DataFrame:
-    """(doc_id, sh) — word n-grams, built JVM-side.
+def _minhash_sql(
+    num_perm: int, bands: int, key: str = "doc_id"
+) -> tuple[str, str]:
+    """DuckDB twin of ``minhash_signatures`` + ``band_entries`` from the
+    SAME ``_perm_params`` stream, for the oracles of the portable
+    queries: ``mins`` is the select list of one ``m{i}`` column per
+    permutation over an ``hs`` list column, and ``band_rows`` is the
+    UNION ALL of one (``key``, band, ``bh`` raw slice) row set per band,
+    read FROM a ``sigs`` CTE."""
+    rows = num_perm // bands
+    mins = ",\n             ".join(
+        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {_MERSENNE}))"
+        f" AS m{i}"
+        for i, (a, b) in enumerate(_perm_params(num_perm))
+    )
+    band_rows = "\n      UNION ALL\n      ".join(
+        "SELECT {k}, {b} AS band, [{ms}] AS bh FROM sigs".format(
+            k=key,
+            b=b,
+            ms=", ".join(f"m{b * rows + r}" for r in range(rows)),
+        )
+        for b in range(bands)
+    )
+    return mins, band_rows
 
-    ``distinct=False`` skips the dedup shuffle — correct whenever the
-    consumer is multiset-invariant (MinHash: min over a multiset equals
-    min over its set)."""
-    toks = docs.select("doc_id", F.split(text_col, " ").alias("ws")).filter(
-        F.size("ws") >= n
+
+def portable_hash60(col) -> "F.Column":
+    """Engine-portable 60-bit hash: first 15 hex digits of md5, as a
+    long. md5 over UTF-8 bytes and hex→decimal conversion produce
+    identical values in Spark (``conv``) and DuckDB (``'0x'||…::BIGINT``)
+    — unlike xxhash64, which is engine-specific. Slower than xxhash64
+    (md5 + string slicing per shingle); exists so the FULL MinHash+LSH
+    pipeline has a hash-checkable oracle twin."""
+    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast(
+        "long"
     )
-    sh = F.transform(
-        F.sequence(F.lit(0), F.size("ws") - n),
-        lambda i: F.concat_ws(
-            " ", *[F.col("ws")[i + j] for j in range(n)]
-        ),
+
+
+def shingle_hashes(
+    docs: DataFrame, n: int = 3, text_col: str = "text", portable: bool = False
+) -> DataFrame:
+    """(doc_id, hs array<bigint>) — each doc's word n-gram shingles
+    (space-split tokens), hashed into [0, _MERSENNE) in one map-only
+    pass: xxhash64, or ``portable_hash60`` when ``portable`` (every
+    value then replays in DuckDB). The int arrays are the shareable
+    intermediate: signatures AND exact set verification
+    (array_intersect / array_distinct) both consume them, so a caller
+    caches ~8 bytes per shingle instead of the shingle strings. A
+    repeated shingle keeps its repeats (MinHash is multiset-invariant;
+    set consumers apply ``array_distinct``). Docs shorter than ``n``
+    tokens are dropped, which is what guarantees
+    ``minhash_signatures``' non-empty precondition."""
+    h = portable_hash60 if portable else F.xxhash64
+    ws = F.col("ws")
+    return (
+        docs.select("doc_id", F.split(text_col, " ").alias("ws"))
+        .filter(F.size("ws") >= n)
+        .select(
+            "doc_id",
+            F.transform(
+                F.sequence(F.lit(0), F.size("ws") - n),
+                lambda i: F.pmod(
+                    h(F.concat_ws(" ", *[ws[i + j] for j in range(n)])),
+                    F.lit(_MERSENNE),
+                ),
+            ).alias("hs"),
+        )
     )
-    out = toks.select("doc_id", F.explode(sh).alias("sh"))
-    return out.distinct() if distinct else out
 
 
 def minhash_signatures(
-    shingles: DataFrame, num_perm: int = 64, seed: int = 42
+    hashes: DataFrame, num_perm: int = 64, seed: int = 42
 ) -> DataFrame:
-    """(doc_id, sig array<bigint>) from exploded (doc_id, sh) rows:
-    xxhash64 each shingle, then num_perm min-aggregations of (a*h+b) mod p
-    (universal hashing). ``pmod`` keeps values non-negative (xxhash64 is
-    signed). One shuffle on doc_id."""
-    h = F.pmod(F.xxhash64("sh"), F.lit(_MERSENNE))
-    hashed = shingles.select("doc_id", h.alias("h"))
-    aggs = [
-        F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(_MERSENNE))).alias(
-            f"_m{i}"
-        )
-        for i, (a, b) in enumerate(_perm_params(num_perm, seed))
-    ]
-    sig = hashed.groupBy("doc_id").agg(*aggs)
-    return sig.select(
-        "doc_id", F.array(*[f"_m{i}" for i in range(num_perm)]).alias("sig")
-    )
+    """(doc_id, sig array<bigint>) from ``shingle_hashes`` rows: per
+    permutation, the min over the universal hashes (a*h + b) mod
+    _MERSENNE. Map-only: no shingle is ever shuffled.
 
+    PRECONDITION: hash arrays must be NON-EMPTY. A null or empty array
+    yields a NULL signature, where a JVM
+    ``array_min(transform(...))`` fold yields an array of nulls;
+    ``shingle_hashes`` guarantees non-emptiness, so an external caller
+    that feeds empties must filter first.
 
-def hashed_shingle_arrays(
-    docs: DataFrame, text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(doc_id, hs array<bigint>) — word n-gram shingles hashed to
-    int64 in one map-only pass. The int arrays are the shareable
-    intermediate: signatures (the Arrow permutation-min kernel) AND exact
-    set verification (array_intersect / array_distinct) both consume
-    them, so a caller caches ~8 bytes per shingle instead of the
-    shingle strings, and the string shingles are materialized exactly
-    once."""
-    toks = docs.select("doc_id", F.split(text_col, " ").alias("ws")).filter(
-        F.size("ws") >= n
-    )
-    shingle_arr = F.transform(
-        F.sequence(F.lit(0), F.size("ws") - n),
-        lambda i: F.concat_ws(" ", *[F.col("ws")[i + j] for j in range(n)]),
-    )
-    return toks.select(
-        "doc_id",
-        F.transform(
-            shingle_arr, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE))
-        ).alias("hs"),
-    )
-
-
-def minhash_signatures_from_hashes(
-    hashes: DataFrame,
-    hash_col: str = "hs",
-    num_perm: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Map-only signatures from precomputed (doc_id, hashed-shingle
-    array) rows: per-permutation min over the universal hashes
-    (a*h + b) mod _MERSENNE.
-
-    PRECONDITION (ADVICE r15): hash arrays must be NON-EMPTY. A null
-    or empty array yields a NULL signature here, where the old JVM
-    expression produced a non-null array of 64 nulls — in-repo callers
-    all guarantee non-emptiness via the ``size(ws) >= n`` shingling
-    filter; an external caller that feeds empties would see its LSH
-    banding behavior change, so filter or assert first.
-
-    The min fold is an Arrow-batched numpy kernel rather than
-    per-permutation ``array_min(transform(...))`` columns: JVM
+    The min fold is an Arrow-batched exact-int64 numpy kernel rather
+    than per-permutation ``array_min(transform(...))`` columns: JVM
     higher-order lambdas evaluate INTERPRETED (outside whole-stage
-    codegen), so at 64 permutations the expression path cost more
-    than every other stage of the LSH pipeline combined (measured 4x:
-    1.42 -> 0.36 s over the cached sf0.1 hash arrays; in-query
-    min-of-4 3.83 -> 1.66 s fuzzy decontamination, 1.74 -> 1.42 s
-    minhash_lsh_near_dups). Arithmetic
-    is bit-identical — h ∈ [0, M), a < M = 2^31 - 1 keeps every
-    product below 2^62, inside exact int64 on both engines. Null or
-    empty shingle arrays yield a null signature (the JVM expression
-    produced an array of per-permutation nulls; no pipeline consumer
-    sees either, because shingling filters ``size(ws) >= n`` —
-    equivalence pinned in tests/test_scale_paths.py::
-    test_signature_kernel_matches_jvm_expression). The kernel
-    processes each Arrow batch in row chunks
-    bounded by ``_SIG_CHUNK_ELEMS`` projected elements, so peak
-    memory per task is ~64 MB regardless of batch size. A small
-    over-partitioned input runs as ``fan_in`` chunks: one Python task
-    per ``_ARROW_TASK_BYTES`` of estimated input."""
+    codegen), which at 64 permutations cost more than every other
+    stage of the LSH pipeline combined (measured 4x: 1.42 -> 0.36 s
+    over the cached sf0.1 hash arrays). Arithmetic is bit-identical to
+    that JVM fold — h ∈ [0, M), a < M = 2^31 - 1 keeps every product
+    below 2^62, inside exact int64 on both engines (pinned in
+    tests/test_scale_paths.py::test_signature_kernel_matches_jvm_expression),
+    so the DuckDB twins replay it with ``list_min(list_transform(...))``.
+    Each Arrow batch runs in row chunks bounded by ``_SIG_CHUNK_ELEMS``
+    projected elements, so peak memory per task is ~64 MB regardless
+    of batch size. A small over-partitioned input runs as ``fan_in``
+    chunks: one Python task per ``_ARROW_TASK_BYTES`` of estimated
+    input."""
     params = _perm_params(num_perm, seed)
     a_vec = np.array([p[0] for p in params], dtype=np.int64)[:, None]
     b_vec = np.array([p[1] for p in params], dtype=np.int64)[:, None]
@@ -348,11 +348,10 @@ def minhash_signatures_from_hashes(
             if a is None or a.size == 0:
                 continue  # null signature, array_min([]) semantics
             # flush BEFORE appending a row that would push the chunk
-            # past the cap (ADVICE r15): an oversized hash array then
-            # runs as its OWN chunk, so peak memory is
+            # past the cap: an oversized hash array then runs as its
+            # OWN chunk, so peak memory is
             # max(cap, largest_row * num_perm) with no other rows
-            # riding along — previously one huge row appended to a
-            # near-full chunk could overshoot the documented cap
+            # riding along
             if chunk and (chunk_elems + a.size) * len(params) >= (
                 _SIG_CHUNK_ELEMS
             ):
@@ -364,65 +363,39 @@ def minhash_signatures_from_hashes(
         flush()
         return pd.Series(out)
 
-    return fan_in(hashes).select("doc_id", _sig(hash_col).alias("sig"))
+    return fan_in(hashes).select("doc_id", _sig("hs").alias("sig"))
 
 
-def minhash_signatures_maponly(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Shuffle-FREE signatures: the whole doc→signature computation is one
-    map-only projection — shingle array → hash array (JVM) → the Arrow
-    permutation-min kernel. Identical output to minhash_signatures
-    (min over a multiset == min over its set), but map-only: at 100 TB
-    there is no exploded shingle shuffle at all. Docs shorter than
-    ``n`` tokens are dropped by the shingling filter, which is also
-    what guarantees the kernel's non-empty-input precondition (see
-    ``minhash_signatures_from_hashes``)."""
-    return minhash_signatures_from_hashes(
-        hashed_shingle_arrays(docs, text_col, n), "hs", num_perm, seed
+def band_entries(sig: DataFrame, bands: int) -> DataFrame:
+    """(doc_id, band, bh) — one row per signature band, keyed by the
+    band's RAW signature slice (``size(sig) div bands`` components).
+    Array equality is the bucket, not an engine hash of it, so the
+    key replays in DuckDB for the portable twins; the xxhash64 queries
+    verify every candidate by exact Jaccard, so the key never shows in
+    their rows either."""
+    rows = F.expr(f"size(sig) div {bands}").cast("int")
+    entries = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.struct(
+            b.alias("band"), F.slice("sig", b * rows + 1, rows).alias("bh")
+        ),
+    )
+    return sig.select("doc_id", F.explode(entries).alias("e")).select(
+        "doc_id", "e.band", "e.bh"
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    num_perm: int,
-    bands: int = 16,
-    rows_per_band: int | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame, bands: int = 16) -> DataFrame:
     """(doc_a, doc_b) candidates — docs whose signature slice collides in
     at least one band. Bucketed self-join: the shuffle key is
-    (band, band_hash), never the full cross product.
-
-    ``num_perm`` is required: probing it from the data would be a driver
-    action (``head()``) hidden inside a transformation."""
-    rows_per_band = rows_per_band or num_perm // bands
-    band_entries = signatures.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.slice(
-                            F.col("sig"), b * rows_per_band + 1, rows_per_band
-                        )
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("e"),
-    ).select("doc_id", "e.band", "e.bucket")
-    a = band_entries.alias("a")
-    b = band_entries.alias("b")
+    (band, slice), never the full cross product."""
+    e = band_entries(signatures, bands)
+    a, b = e.alias("a"), e.alias("b")
     return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.bh") == F.col("b.bh"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
@@ -437,16 +410,23 @@ def minhash_near_duplicates(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
+    portable: bool = False,
 ) -> DataFrame:
-    """(doc_a, doc_b, est_jaccard) — LSH candidates verified by the
-    estimated Jaccard (matching-component fraction ≥ threshold)."""
-    # cache: the signature table feeds three consumers (band entries and
-    # both sides of the verification join) — without it the map-only
-    # lineage recomputes per consumer
-    sig = minhash_signatures_maponly(
-        fan_out(docs), text_col, 3, num_perm, seed
+    """(doc_a, doc_b, est_jaccard) — word 3-gram MinHash + LSH
+    candidates verified by the estimated Jaccard (matching-component
+    fraction ≥ threshold). ``portable`` builds on ``portable_hash60``,
+    so every intermediate — signatures, band membership, candidate
+    set, estimate — is bit-reproducible in DuckDB SQL.
+
+    Eager: the signature table is cached for its three consumers (band
+    entries and both sides of the verification join), so the pair
+    result is forced once (``localCheckpoint``) and the corpus-sized
+    signature blocks are released instead of pinned for the rest of
+    the session."""
+    sig = minhash_signatures(
+        shingle_hashes(docs, 3, text_col, portable), num_perm, seed
     ).cache()
-    cand = lsh_candidate_pairs(sig, num_perm, bands)
+    cand = lsh_candidate_pairs(sig, bands)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     est = (
@@ -458,109 +438,15 @@ def minhash_near_duplicates(
         )
         / F.lit(float(num_perm))
     )
-    return (
+    out = (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select("doc_a", "doc_b", F.round(est, 6).alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= threshold)
+        .localCheckpoint(eager=True)
     )
-
-
-# --- portable-hash MinHash (oracle-checkable twin) -----------------------------
-
-
-def portable_hash60(col) -> "F.Column":
-    """Engine-portable 60-bit hash: first 15 hex digits of md5, as a
-    long. md5 over UTF-8 bytes and hex→decimal conversion produce
-    identical values in Spark (``conv``) and DuckDB (``'0x'||…::BIGINT``)
-    — unlike xxhash64, which is engine-specific. Slower than xxhash64
-    (md5 + string slicing per shingle); exists so the FULL MinHash+LSH
-    pipeline has a hash-checkable oracle twin."""
-    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast(
-        "long"
-    )
-
-
-def minhash_near_duplicates_portable(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_perm: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """(doc_a, doc_b, est_jaccard) — same algorithm as
-    ``minhash_near_duplicates`` but built on ``portable_hash60`` and with
-    band buckets keyed by the raw signature slice (array equality) rather
-    than an engine hash of it, so every intermediate value — signatures,
-    band membership, candidate set, estimate — is bit-reproducible in
-    DuckDB SQL. The xxhash64 pipeline remains the production scale path
-    (faster hash, 64 perms)."""
-    rows_per_band = num_perm // bands
-    toks = docs.select("doc_id", F.split(text_col, " ").alias("ws")).filter(
-        F.size("ws") >= 3
-    )
-    shingle_arr = F.transform(
-        F.sequence(F.lit(0), F.size("ws") - 3),
-        lambda i: F.concat_ws(" ", F.col("ws")[i], F.col("ws")[i + 1], F.col("ws")[i + 2]),
-    )
-    hashes = toks.select(
-        "doc_id",
-        F.transform(
-            shingle_arr, lambda s: F.pmod(portable_hash60(s), F.lit(_MERSENNE))
-        ).alias("hs"),
-    )
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    "hs", lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MERSENNE))
-                )
-            )
-            for (a, b) in _perm_params(num_perm, seed)
-        ]
-    )
-    sigs = hashes.select("doc_id", sig.alias("sig")).cache()
-    band_entries = sigs.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band).alias(
-                        "bh"
-                    ),
-                ),
-            )
-        ).alias("e"),
-    ).select("doc_id", "e.band", "e.bh")
-    a = band_entries.alias("a")
-    b = band_entries.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
-        )
-        / F.lit(float(num_perm))
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(est, 6).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
-    )
+    sig.unpersist(blocking=False)
+    return out
 
 
 # --- SimHash -------------------------------------------------------------------

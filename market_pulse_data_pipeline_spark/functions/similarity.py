@@ -5,8 +5,6 @@
   fixed deterministic planes, candidates from Hamming-near buckets,
   exact cosine re-rank on the candidate set only. At 100 TB the bucket
   join touches a small fraction of vectors instead of all of them.
-- ``embedding_near_duplicates``: cosine ≥ threshold pairs through the
-  same LSH bucketing (embedding-based near-dup for dedup pipelines).
 - ``ivf_ann_topk``: the one inverted-file ANN path — a coarse codebook
   from the integer-snapped k-means fit (functions/clustering.py's one
   Lloyd loop), an integer probe of the cells nearest the quantized
@@ -244,32 +242,6 @@ def lsh_chunk_candidate_pairs(
             F.col(f"b.{id_col}").alias("id_b"),
         )
         .distinct()
-    )
-
-
-def embedding_near_duplicates(
-    emb: DataFrame,
-    dim: int,
-    threshold: float = 0.95,
-    n_planes: int = 16,
-    max_hamming: int = 2,
-    id_col: str = "vec_id",
-    seed: int = 42,
-) -> DataFrame:
-    """(id_a, id_b, cosine) — embedding-cosine near-dup pairs via LSH
-    chunk bucketing (pigeonhole: hamming ≤ 2 over 4 chunks → some chunk
-    equal) + exact cosine verification."""
-    with_sig = add_lsh_signature(emb, dim, n_planes, seed)
-    pairs = lsh_chunk_candidate_pairs(with_sig, n_planes, max_hamming, id_col)
-    ea = emb.select(F.col(id_col).alias("id_a"), F.col("embedding").alias("emb_a"))
-    eb = emb.select(F.col(id_col).alias("id_b"), F.col("embedding").alias("emb_b"))
-    va = F.col("emb_a").cast("array<double>")
-    vb = F.col("emb_b").cast("array<double>")
-    return (
-        pairs.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select("id_a", "id_b", F.round(cosine(va, vb), 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
     )
 
 

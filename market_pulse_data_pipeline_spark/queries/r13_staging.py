@@ -347,8 +347,7 @@ def rendezvous_shard_assignment(
 # --------------------------------------------------------------------
 
 _RC_PERM = 16  # same portable pipeline parameters as minhash_lsh_portable
-_RC_BANDS = 4
-_RC_ROWS = _RC_PERM // _RC_BANDS  # s-curve midpoint (1/4)^(1/4) ~ 0.71
+_RC_BANDS = 4  # 4 rows per band: s-curve midpoint (1/4)^(1/4) ~ 0.71
 _RC_PLANT_MOD = 17  # every 17th doc seeds the three planted pair shapes
 _RC_V_OFFSET = 3_000_000_000  # verbatim copy (J = 1)
 _RC_P8_OFFSET = 3_010_000_000  # 80%-prefix copy (J ~ 0.75)
@@ -365,24 +364,10 @@ def _rc_cut_sql(num: int, den: int) -> str:
 def _recall_oracle() -> str:
     from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
         _MERSENNE,
-        _perm_params,
+        _minhash_sql,
     )
 
-    params = _perm_params(_RC_PERM)
-    mins = ",\n             ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {_MERSENNE}))"
-        f" AS m{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    band_rows = "\n      UNION ALL\n      ".join(
-        "SELECT doc_id, {b} AS band, [{ms}] AS bh FROM sigs".format(
-            b=b,
-            ms=", ".join(
-                f"m{b * _RC_ROWS + r}" for r in range(_RC_ROWS)
-            ),
-        )
-        for b in range(_RC_BANDS)
-    )
+    mins, band_rows = _minhash_sql(_RC_PERM, _RC_BANDS)
     return f"""
     WITH seeds AS (
       SELECT doc_id, string_split(text, ' ') AS ws FROM documents
@@ -475,10 +460,10 @@ def _recall_oracle() -> str:
 )
 def lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
-        _MERSENNE,
-        _perm_params,
         fan_out,
-        portable_hash60,
+        lsh_candidate_pairs,
+        minhash_signatures,
+        shingle_hashes,
     )
     from market_pulse_data_pipeline_spark.queries.common import (  # noqa: PLC0415
         round_div,
@@ -522,24 +507,11 @@ def lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    toks = fan_out(alldocs).select(
-        "doc_id", F.split("text", " ").alias("ws")
-    ).filter(F.size("ws") >= 3)
-    shingle_arr = F.transform(
-        F.sequence(F.lit(0), F.size("ws") - 3),
-        lambda i: F.concat_ws(
-            " ", F.col("ws")[i], F.col("ws")[i + 1], F.col("ws")[i + 2]
-        ),
+    hsets = (
+        shingle_hashes(fan_out(alldocs), portable=True)
+        .select("doc_id", F.array_distinct("hs").alias("hs"))
+        .cache()
     )
-    hsets = toks.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                shingle_arr,
-                lambda s: F.pmod(portable_hash60(s), F.lit(_MERSENNE)),
-            )
-        ).alias("hs"),
-    ).cache()
     inv = hsets.select("doc_id", F.explode("hs").alias("h"))
     ia, ib = inv.alias("a"), inv.alias("b")
     truth = (
@@ -567,52 +539,12 @@ def lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.size("ha") + F.size("hb") - inter).alias("u"),
         )
     )
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    "hs",
-                    lambda h: F.pmod(
-                        F.lit(a) * h + F.lit(b), F.lit(_MERSENNE)
-                    ),
-                )
-            )
-            for (a, b) in _perm_params(_RC_PERM)
-        ]
-    )
-    sigs = hsets.select("doc_id", sig.alias("sig"))
-    band_entries = sigs.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_RC_BANDS - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.slice(
-                        F.col("sig"), b * _RC_ROWS + 1, _RC_ROWS
-                    ).alias("bh"),
-                ),
-            )
-        ).alias("e"),
-    ).select("doc_id", "e.band", "e.bh")
-    ba, bb = band_entries.alias("a"), band_entries.alias("b")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.lit(True).alias("is_cand"),
-        )
-        .distinct()
-    )
+    cand = lsh_candidate_pairs(
+        minhash_signatures(hsets, _RC_PERM), _RC_BANDS
+    ).withColumn("is_cand", F.lit(True))
     joined = jacc.join(cand, ["doc_a", "doc_b"], "left")
     hit = F.when(F.col("is_cand"), 1).otherwise(0)
-    return (
+    out = (
         joined.select(
             F.least(
                 F.floor((F.col("i") * 10) / F.col("u")), F.lit(9).cast("bigint")
@@ -634,3 +566,7 @@ def lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("j_bucket")
     )
+    # force the 10-row curve, then release the corpus-sized hash sets
+    out = out.localCheckpoint(eager=True)
+    hsets.unpersist(blocking=False)
+    return out

@@ -625,22 +625,10 @@ def _inc_neardup_oracle() -> str:
     banded join pairs INCOMING docs against CORPUS docs only."""
     from market_pulse_data_pipeline_spark.functions.dedup import (
         _MERSENNE,
-        _perm_params,
+        _minhash_sql,
     )
 
-    params = _perm_params(_INC_PERM)
-    rpb = _INC_PERM // _INC_BANDS
-    mins = ",\n             ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {_MERSENNE}))"
-        f" AS m{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    band_rows = "\n      UNION ALL\n      ".join(
-        "SELECT doc_id, side, {b} AS band, [{ms}] AS bh FROM sigs".format(
-            b=b, ms=", ".join(f"m{b * rpb + r}" for r in range(rpb))
-        )
-        for b in range(_INC_BANDS)
-    )
+    mins, band_rows = _minhash_sql(_INC_PERM, _INC_BANDS, "doc_id, side")
     eq_sum = " + ".join(f"(si.m{i} = sc.m{i})::INT" for i in range(_INC_PERM))
     return f"""
     WITH corpus AS (
@@ -706,10 +694,10 @@ def _inc_neardup_oracle() -> str:
 )
 def incremental_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from market_pulse_data_pipeline_spark.functions.dedup import (
-        _MERSENNE,
+        band_entries,
         fan_out,
-        minhash_signatures_from_hashes,
-        portable_hash60,
+        minhash_signatures,
+        shingle_hashes,
     )
 
     docs = t(spark, sf_dir, "documents")
@@ -725,51 +713,13 @@ def incremental_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    rpb = _INC_PERM // _INC_BANDS
-
     def sigs_of(side: DataFrame) -> DataFrame:
         # fan_out BEFORE the md5 shingle hashing (round-10 single-split
         # finding: each side otherwise computes its whole signature
-        # table on one core); no-op on a many-split corpus. The
-        # 16-permutation min fold runs through the shared Arrow int64
-        # kernel — identical (a*h+b) % M arithmetic with the same
-        # _perm_params(seed=42) stream, bit-equivalence pinned by
-        # tests/test_scale_paths.py::
-        # test_signature_kernel_matches_jvm_expression — instead of 16
-        # interpreted array_min(transform(...)) folds per doc (the
-        # VERDICT r15 item 5 class; this query was the last benched
-        # signature pipeline still on the expression path, r16).
-        toks = fan_out(side).select(
-            "doc_id", F.split("text", " ").alias("ws")
-        ).filter(F.size("ws") >= 3)
-        shingle_arr = F.transform(
-            F.sequence(F.lit(0), F.size("ws") - 3),
-            lambda i: F.concat_ws(
-                " ", F.col("ws")[i], F.col("ws")[i + 1], F.col("ws")[i + 2]
-            ),
+        # table on one core); no-op on a many-split corpus
+        return minhash_signatures(
+            shingle_hashes(fan_out(side), portable=True), _INC_PERM
         )
-        hashes = toks.select(
-            "doc_id",
-            F.transform(
-                shingle_arr,
-                lambda s: F.pmod(portable_hash60(s), F.lit(_MERSENNE)),
-            ).alias("hs"),
-        )
-        return minhash_signatures_from_hashes(hashes, "hs", _INC_PERM)
-
-    def bands_of(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(_INC_BANDS - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.slice(F.col("sig"), b * rpb + 1, rpb).alias("bh"),
-                    ),
-                )
-            ).alias("e"),
-        ).select("doc_id", "e.band", "e.bh")
 
     # cached for the band-explode + signature-compare double read, then
     # released after the eager checkpoint below (the registered
@@ -778,10 +728,10 @@ def incremental_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig_c = sigs_of(corpus).cache()
     sig_i = sigs_of(incoming).cache()
     cand = (
-        bands_of(sig_i)
+        band_entries(sig_i, _INC_BANDS)
         .select(F.col("doc_id").alias("inc_id"), "band", "bh")
         .join(
-            bands_of(sig_c).select(
+            band_entries(sig_c, _INC_BANDS).select(
                 F.col("doc_id").alias("corpus_id"), "band", "bh"
             ),
             ["band", "bh"],

@@ -269,7 +269,6 @@ _FZ_EVAL_MOD = 53  # doc_id % 53 == 0 plays the held-out eval set
 _FZ_VERBATIM_MOD = 2 * _FZ_EVAL_MOD  # every 2nd eval doc leaks verbatim
 _FZ_PERM = 128
 _FZ_BANDS = 32  # 32 bands x 4 rows: P(miss J=0.8 pair) = (1-.8^4)^32 ~ 5e-8
-_FZ_ROWS = _FZ_PERM // _FZ_BANDS
 _FZ_V_OFFSET = 1_000_000_000  # verbatim leak ids
 _FZ_P_OFFSET = 2_000_000_000  # 90%-prefix partial leak ids (J ~ 0.83-0.88)
 _FZ_N_OFFSET = 3_000_000_000  # 40%-prefix negatives (J < 0.35, never flag)
@@ -368,9 +367,10 @@ def eval_decontaminate_fuzzy_minhash(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
+        band_entries,
         fan_out,
-        hashed_shingle_arrays,
-        minhash_signatures_from_hashes,
+        minhash_signatures,
+        shingle_hashes,
     )
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -406,34 +406,20 @@ def eval_decontaminate_fuzzy_minhash(
     # real many-split corpus).
     # dense=True (r17): the 13-gram build + xxhash is compute-dense
     # (A/B: the size-aware byte floor lost 0.62x on this query)
-    th = hashed_shingle_arrays(
-        fan_out(train, dense=True), "text", _FZ_N
-    ).cache()
-    eh = hashed_shingle_arrays(evald, "text", _FZ_N).cache()
-    tsig = minhash_signatures_from_hashes(th, "hs", _FZ_PERM)
-    esig = minhash_signatures_from_hashes(eh, "hs", _FZ_PERM)
-
-    def bands(sig: DataFrame) -> DataFrame:
-        entries = F.transform(
-            F.sequence(F.lit(0), F.lit(_FZ_BANDS - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.xxhash64(
-                    F.slice(F.col("sig"), b * _FZ_ROWS + 1, _FZ_ROWS)
-                ).alias("bucket"),
-            ),
-        )
-        return sig.select(
-            "doc_id", F.explode(entries).alias("e")
-        ).select("doc_id", "e.band", "e.bucket")
+    th = shingle_hashes(fan_out(train, dense=True), _FZ_N).cache()
+    eh = shingle_hashes(evald, _FZ_N).cache()
+    tsig = minhash_signatures(th, _FZ_PERM)
+    esig = minhash_signatures(eh, _FZ_PERM)
 
     cand = (
-        bands(tsig)
+        band_entries(tsig, _FZ_BANDS)
         .join(
             F.broadcast(
-                bands(esig).withColumnRenamed("doc_id", "eval_doc_id")
+                band_entries(esig, _FZ_BANDS).withColumnRenamed(
+                    "doc_id", "eval_doc_id"
+                )
             ),
-            ["band", "bucket"],
+            ["band", "bh"],
         )
         .select("doc_id", "eval_doc_id")
         .distinct()

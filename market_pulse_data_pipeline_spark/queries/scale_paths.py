@@ -115,9 +115,9 @@ def _docs_with_planted_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
         fan_out,
-        hashed_shingle_arrays,
         lsh_candidate_pairs,
-        minhash_signatures_from_hashes,
+        minhash_signatures,
+        shingle_hashes,
     )
     from market_pulse_data_pipeline_spark.queries.common import (  # noqa: PLC0415
         round_div,
@@ -135,12 +135,12 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection runs on all cores, not the single-split scan's tasks.
     # dense=True (r17): shingle hashing is compute-dense — the byte
     # floor starved it (A/B: floor lost 0.67x on this query)
-    hsh = hashed_shingle_arrays(fan_out(docs, dense=True), "text", 3).cache()
+    hsh = shingle_hashes(fan_out(docs, dense=True)).cache()
     # sig cached too: the banded self-join consumes it on both sides,
     # and the 64-permutation kernel pass is the next-most-expensive
     # stage after shingle hashing
-    sig = minhash_signatures_from_hashes(hsh, "hs", 64, 42).cache()
-    cand = lsh_candidate_pairs(sig, num_perm=64, bands=16)
+    sig = minhash_signatures(hsh, 64, 42).cache()
+    cand = lsh_candidate_pairs(sig, bands=16)
     # exact verification over candidate pairs only: JVM-side array
     # intersection; candidates broadcast (bounded by the banded join)
     a = hsh.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
@@ -714,26 +714,14 @@ def ann_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _portable_minhash_sql(num_perm: int = 16, bands: int = 4, threshold: float = 0.5) -> str:
-    """Generate the DuckDB twin of minhash_near_duplicates_portable from
-    the SAME permutation parameters (functions.dedup._perm_params)."""
+    """Generate the DuckDB twin of the portable minhash_near_duplicates
+    from the SAME permutation parameters (functions.dedup._minhash_sql)."""
     from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
         _MERSENNE,
-        _perm_params,
+        _minhash_sql,
     )
 
-    params = _perm_params(num_perm)
-    rows_per_band = num_perm // bands
-    mins = ",\n             ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {_MERSENNE})) AS m{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    band_rows = "\n      UNION ALL\n      ".join(
-        "SELECT doc_id, {b} AS band, [{ms}] AS bh FROM sigs".format(
-            b=b,
-            ms=", ".join(f"m{b * rows_per_band + r}" for r in range(rows_per_band)),
-        )
-        for b in range(bands)
-    )
+    mins, band_rows = _minhash_sql(num_perm, bands)
     eq_sum = " + ".join(f"(sa.m{i} = sb.m{i})::INT" for i in range(num_perm))
     return f"""
     WITH base AS (
@@ -784,7 +772,7 @@ def _portable_minhash_sql(num_perm: int = 16, bands: int = 4, threshold: float =
 )
 def minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
-        minhash_near_duplicates_portable,
+        minhash_near_duplicates,
     )
 
     base = t(spark, sf_dir, "documents").filter(
@@ -794,7 +782,9 @@ def minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + _PLANT_OFFSET).alias("doc_id"),
         F.concat("text", F.lit(" planted")).alias("text"),
     )
-    return minhash_near_duplicates_portable(base.unionByName(planted))
+    return minhash_near_duplicates(
+        base.unionByName(planted), num_perm=16, bands=4, portable=True
+    )
 
 
 _IVF_K = 16  # coarse centroids

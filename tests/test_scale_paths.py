@@ -1,13 +1,15 @@
 """Semantics tests for the scale-path operators: MinHash-LSH vs exact
 Jaccard, SimHash, LSH-ANN recall vs brute force, multimodal plumbing."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from market_pulse_data_pipeline_spark.functions.dedup import (
     minhash_near_duplicates,
+    shingle_hashes,
     simhash_near_duplicates,
-    word_shingles,
 )
 from market_pulse_data_pipeline_spark.functions.multimodal import (
     decode_media,
@@ -32,10 +34,13 @@ def planted_docs(spark, sf_dir):
     return docs.unionByName(mutated).cache()
 
 
-def test_minhash_finds_planted_dups(planted_docs):
+@pytest.mark.parametrize("portable", [False, True])
+def test_minhash_finds_planted_dups(planted_docs, portable):
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in minhash_near_duplicates(planted_docs, threshold=0.5).collect()
+        for r in minhash_near_duplicates(
+            planted_docs, threshold=0.5, portable=portable
+        ).collect()
     }
     planted = {
         (r.doc_id, r.doc_id + PLANT)
@@ -47,15 +52,61 @@ def test_minhash_finds_planted_dups(planted_docs):
     missed = planted - pairs
     assert len(missed) <= max(1, len(planted) // 10), f"missed {missed}"
     # and nothing wildly dissimilar sneaks in: verify against exact Jaccard
-    sh = word_shingles(planted_docs)
-    sizes = {r.doc_id: r.n for r in sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-    shing = {}
-    for r in sh.collect():
-        shing.setdefault(r.doc_id, set()).add(r.sh)
+    shing = {
+        r.doc_id: set(r.hs)
+        for r in shingle_hashes(planted_docs, portable=portable).collect()
+    }
     for a, b in pairs:
         inter = len(shing[a] & shing[b])
-        jac = inter / (sizes[a] + sizes[b] - inter)
+        jac = inter / (len(shing[a]) + len(shing[b]) - inter)
         assert jac >= 0.3, f"false positive pair ({a},{b}) exact jaccard={jac}"
+
+
+MINHASH_QUERIES = (
+    "minhash_lsh_near_dups",
+    "minhash_lsh_portable",
+    "incremental_near_dup_lsh",
+    "eval_decontaminate_fuzzy_minhash",
+    "lsh_recall_curve",
+)
+
+
+def test_minhash_queries_release_their_caches(spark, sf_dir):
+    # every MinHash query caches corpus-sized hash or signature tables
+    # for its multi-consumer plan; once the result is consumed, the
+    # only block it may leave behind is the result's own eager
+    # localCheckpoint
+    from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> dict:
+        return dict(jsc.getPersistentRDDs())
+
+    before = persisted()
+    try:
+        for name in MINHASH_QUERIES:
+            df = QUERY_REGISTRY[name].spark(spark, sf001)
+            df.collect()
+            plan = df._jdf.queryExecution().logical()
+            own = (
+                plan.rdd().id()
+                if plan.getClass().getSimpleName() == "LogicalRDD"
+                else None
+            )
+            left = {
+                k: v.toDebugString().splitlines()[0]
+                for k, v in persisted().items()
+                if k not in before and k != own
+            }
+            assert not left, f"{name} left persisted: {left}"
+            if own is not None:
+                persisted()[own].unpersist(True)
+    finally:
+        for k, v in persisted().items():
+            if k not in before:
+                v.unpersist(True)
 
 
 def test_simhash_finds_planted_dups(planted_docs):
@@ -232,7 +283,7 @@ def test_signature_kernel_matches_jvm_expression(spark, monkeypatch):
         monkeypatch.setattr(dd, "_SIG_CHUNK_ELEMS", chunk_elems)
         got = {
             r["doc_id"]: (None if r["sig"] is None else list(r["sig"]))
-            for r in dd.minhash_signatures_from_hashes(df, "hs", 64, 42)
+            for r in dd.minhash_signatures(df, 64, 42)
             .collect()
         }
         assert got == expected, f"divergence at chunk_elems={chunk_elems}"

@@ -22,6 +22,7 @@ import json
 import os
 import sys
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -64,6 +65,7 @@ def main() -> int:
     only = set(args.only.split(",")) if args.only else None
 
     from market_pulse_data_pipeline_spark.functions.dedup import (
+        fan_out,
         minhash_near_duplicates,
     )
     from market_pulse_data_pipeline_spark.session import get_spark
@@ -85,10 +87,12 @@ def main() -> int:
             df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    def run(name: str, df: DataFrame) -> None:
+    def run(name: str, df: DataFrame | Callable[[], DataFrame]) -> None:
         if only is not None and name not in only:
             return
         t0 = time.time()
+        if callable(df):  # an eagerly-materializing builder: time it too
+            df = df()
         # NOT df.count(): count references no columns, so Catalyst's
         # column pruning deletes any window/projection the output
         # doesn't feed into the count — a bare count() over the
@@ -193,7 +197,10 @@ def main() -> int:
         )
         docs = c if docs is None else docs.unionByName(c)
     docs = mat(docs, "documents_rot")
-    run("minhash_near_dups", minhash_near_duplicates(docs, threshold=0.5))
+    run(
+        "minhash_near_dups",
+        lambda: minhash_near_duplicates(fan_out(docs), threshold=0.5),
+    )
 
     # sentence-level dedup shape: explode to 10-token windows, digest
     # groupBy + digest join-back (queries/quality.py). Shuffles key on
@@ -860,9 +867,9 @@ def main() -> int:
             _INC_PERM,
         )
         from market_pulse_data_pipeline_spark.functions.dedup import (
-            _MERSENNE,
-            _perm_params,
-            portable_hash60,
+            band_entries,
+            minhash_signatures,
+            shingle_hashes,
         )
 
         docs_all = mat(multiplied(
@@ -878,65 +885,20 @@ def main() -> int:
             )
         )  # fixed-size incoming day
 
-        rpb = _INC_PERM // _INC_BANDS
-
-        def _sigs(side):
-            toks = side.select(
-                "doc_id", F.split("text", " ").alias("ws")
-            ).filter(F.size("ws") >= 3)
-            shingle_arr = F.transform(
-                F.sequence(F.lit(0), F.size("ws") - 3),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.col("ws")[i],
-                    F.col("ws")[i + 1],
-                    F.col("ws")[i + 2],
+        def _bands(side):
+            return band_entries(
+                minhash_signatures(
+                    shingle_hashes(side, portable=True), _INC_PERM
                 ),
+                _INC_BANDS,
             )
-            hashes = toks.select(
-                "doc_id",
-                F.transform(
-                    shingle_arr,
-                    lambda s: F.pmod(portable_hash60(s), F.lit(_MERSENNE)),
-                ).alias("hs"),
-            )
-            sig = F.array(
-                *[
-                    F.array_min(
-                        F.transform(
-                            "hs",
-                            lambda h: F.pmod(
-                                F.lit(a) * h + F.lit(b), F.lit(_MERSENNE)
-                            ),
-                        )
-                    )
-                    for (a, b) in _perm_params(_INC_PERM)
-                ]
-            )
-            return hashes.select("doc_id", sig.alias("sig"))
-
-        def _bands(sigs):
-            return sigs.select(
-                "doc_id",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(_INC_BANDS - 1)),
-                        lambda b: F.struct(
-                            b.alias("band"),
-                            F.slice(
-                                F.col("sig"), b * rpb + 1, rpb
-                            ).alias("bh"),
-                        ),
-                    )
-                ).alias("e"),
-            ).select("doc_id", "e.band", "e.bh")
 
         run(
             "incremental_neardup",
-            _bands(_sigs(batch_in))
+            _bands(batch_in)
             .select(F.col("doc_id").alias("inc_id"), "band", "bh")
             .join(
-                _bands(_sigs(corpus_in)).select(
+                _bands(corpus_in).select(
                     F.col("doc_id").alias("corpus_id"), "band", "bh"
                 ),
                 ["band", "bh"],
@@ -1463,48 +1425,36 @@ def main() -> int:
     # cross-copy identical text never fabricates candidates.
     if only is None or "fuzzy_decontam" in only:
         from market_pulse_data_pipeline_spark.functions.dedup import (
-            hashed_shingle_arrays,
-            minhash_signatures_from_hashes,
+            band_entries,
+            minhash_signatures,
+            shingle_hashes,
         )
         from market_pulse_data_pipeline_spark.queries.r9_staging import (
             _FZ_BANDS,
             _FZ_EVAL_MOD,
             _FZ_N,
             _FZ_PERM,
-            _FZ_ROWS,
         )
 
         docs_fz = tagged_docs("docs_fuzzy_tagged")
         evald_fz = docs_fz.filter(F.col("doc_id") % _FZ_EVAL_MOD == 0)
         train_fz = docs_fz.filter(F.col("doc_id") % _FZ_EVAL_MOD != 0)
-        th_fz = hashed_shingle_arrays(train_fz, "text", _FZ_N)
-        eh_fz = hashed_shingle_arrays(evald_fz, "text", _FZ_N)
-        tsig_fz = minhash_signatures_from_hashes(th_fz, "hs", _FZ_PERM)
-        esig_fz = minhash_signatures_from_hashes(eh_fz, "hs", _FZ_PERM)
 
-        def _bands_fz(sig):
-            entries = F.transform(
-                F.sequence(F.lit(0), F.lit(_FZ_BANDS - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.slice(F.col("sig"), b * _FZ_ROWS + 1, _FZ_ROWS)
-                    ).alias("bucket"),
-                ),
+        def _bands_fz(side):
+            return band_entries(
+                minhash_signatures(shingle_hashes(side, _FZ_N), _FZ_PERM),
+                _FZ_BANDS,
             )
-            return sig.select(
-                "doc_id", F.explode(entries).alias("e")
-            ).select("doc_id", "e.band", "e.bucket")
 
         cand_fz = (
-            _bands_fz(tsig_fz)
+            _bands_fz(train_fz)
             .join(
                 F.broadcast(
-                    _bands_fz(esig_fz).withColumnRenamed(
+                    _bands_fz(evald_fz).withColumnRenamed(
                         "doc_id", "eval_doc_id"
                     )
                 ),
-                ["band", "bucket"],
+                ["band", "bh"],
             )
             .select("doc_id", "eval_doc_id")
             .distinct()
@@ -1926,34 +1876,21 @@ def main() -> int:
     # cross-copy text never pairs — both pair sets must scale ∝ mult.
     if only is None or "recall_curve" in only:
         from market_pulse_data_pipeline_spark.functions.dedup import (
-            _MERSENNE as _RC_M,
-            _perm_params as _rc_perms,
-            portable_hash60 as _rc_h60,
+            lsh_candidate_pairs,
+            minhash_signatures,
+            shingle_hashes,
         )
         from market_pulse_data_pipeline_spark.queries.r13_staging import (
             _RC_BANDS,
             _RC_PERM,
-            _RC_ROWS,
         )
 
         docs_rc = tagged_docs("docs_recall")
-        toks_rc = docs_rc.select(
-            "doc_id", F.split("text", " ").alias("ws")
-        ).filter(F.size("ws") >= 3)
-        sh_rc = F.transform(
-            F.sequence(F.lit(0), F.size("ws") - 3),
-            lambda i: F.concat_ws(
-                " ", F.col("ws")[i], F.col("ws")[i + 1], F.col("ws")[i + 2]
-            ),
+        hsets_rc = (
+            shingle_hashes(docs_rc, portable=True)
+            .select("doc_id", F.array_distinct("hs").alias("hs"))
+            .cache()
         )
-        hsets_rc = toks_rc.select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(
-                    sh_rc, lambda s: F.pmod(_rc_h60(s), F.lit(_RC_M))
-                )
-            ).alias("hs"),
-        ).cache()
         inv_rc = hsets_rc.select("doc_id", F.explode("hs").alias("h"))
         ta, tb = inv_rc.alias("a"), inv_rc.alias("b")
         truth_rc = (
@@ -1968,52 +1905,9 @@ def main() -> int:
             )
             .distinct()
         )
-        sig_rc = F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        "hs",
-                        lambda h: F.pmod(
-                            F.lit(a) * h + F.lit(b), F.lit(_RC_M)
-                        ),
-                    )
-                )
-                for (a, b) in _rc_perms(_RC_PERM)
-            ]
-        )
-        be_rc = (
-            hsets_rc.select("doc_id", sig_rc.alias("sig"))
-            .select(
-                "doc_id",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(_RC_BANDS - 1)),
-                        lambda b: F.struct(
-                            b.alias("band"),
-                            F.slice(
-                                F.col("sig"), b * _RC_ROWS + 1, _RC_ROWS
-                            ).alias("bh"),
-                        ),
-                    )
-                ).alias("e"),
-            )
-            .select("doc_id", "e.band", "e.bh")
-        )
-        ca, cb = be_rc.alias("a"), be_rc.alias("b")
-        cand_rc = (
-            ca.join(
-                cb,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.lit(True).alias("is_cand"),
-            )
-            .distinct()
-        )
+        cand_rc = lsh_candidate_pairs(
+            minhash_signatures(hsets_rc, _RC_PERM), _RC_BANDS
+        ).withColumn("is_cand", F.lit(True))
         run(
             "recall_curve",
             truth_rc.join(cand_rc, ["doc_a", "doc_b"], "left").select(
