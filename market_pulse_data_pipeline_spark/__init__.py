@@ -16,6 +16,10 @@ Layout
 - ``functions``  scalar & text/dedup/similarity/multimodal function library
 - ``plans``      the dbt-like topological model runner
 - ``streaming``  Structured Streaming ingest + event-time operators
+- ``worker_daemon``  the Python worker daemon ``session`` selects
+
+This module imports no pyspark: Python workers import it before
+``worker_daemon`` takes Spark's archives off their path.
 """
 
 __version__ = "0.1.0"

@@ -75,32 +75,32 @@ def _probe_partitions(df: DataFrame) -> int | None:
 
 
 # Size floor per fanned-out partition (bytes of the optimizer's input
-# estimate — for a parquet scan, compressed file bytes). Round-17 fix
-# for the fan-out over-spread VERDICT r16 item 4 names: spreading a
+# estimate — for a parquet scan, compressed file bytes): spreading a
 # sub-MB input to defaultParallelism partitions makes every downstream
-# Python/Arrow stage pay one Python worker task PER PARTITION, which at
-# sf0.1 made the 32-core run SLOWER than the 8-core run on six benched
-# queries (scaling ratios 0.66-0.80). That per-task cost is ~0.2 s of
-# worker CPU (median of 8 runs, 16 identity mapInPandas tasks against
-# 1, local[4], CPython 3.11): PySpark's worker calls
-# ``importlib.invalidate_caches()`` on every task, and each of its
-# zipimporters then re-reads the pyspark.zip directory. The floor is
-# scale-adaptive, not local-tuned: any input past cores x 256 KiB
+# Python/Arrow stage pay one Python worker task per partition. With
+# ``worker_daemon`` that task costs ~0.06 s of CPU before it reads a
+# row, against 0.29 s with Spark's archives on the worker path (median
+# of 8 runs, 16 identity mapInPandas tasks against 1, local[4], CPython
+# 3.11, process-tree CPU). The floor still pays at that cost: without
+# it, the benchmark's query mix spent more set-up CPU in 5 of 5 runs
+# (median 31.6 -> 33.2 s) and more CPU per pass in 3 of 5.
+# It is scale-adaptive, not local-tuned: any input past cores x 256 KiB
 # (a few MB locally, trivially true at 100 TB) still spreads to the
 # full parallelism, and on a real many-split corpus the no-op contract
 # short-circuits before the estimate is even read.
 _FAN_CHUNK_BYTES = 256 * 1024
 
-# Input bytes (optimizer estimate) per Python task for the Arrow
-# kernels ``fan_in`` sizes: the chunk whose compute outweighs the
-# ~0.2 s fixed cost of a Python worker task (see _FAN_CHUNK_BYTES).
-# Measured on 4 cores, one task, worker CPU above that fixed cost: the
-# Lloyd kernels run 18 MB/s (fused final assignment) to 55 MB/s
-# (partial sums) of estimated input, so 0.2 s x 18 MB/s ~ 4 MiB. The
-# MinHash kernel runs 0.6 MB/s of ITS estimate (the estimate counts a
-# hash array as one element), so a 4 MiB MinHash chunk is ~7 s of
-# CPU: it pays its fixed cost many times over and spreads less than
-# its own break-even would.
+# Input bytes (optimizer estimate) per Python task for the Lloyd
+# kernels ``fan_in`` sizes. Measured on 4 cores, one task, worker CPU
+# above the ~0.06 s fixed cost of a task (see _FAN_CHUNK_BYTES): they
+# run 18 MB/s (fused final assignment) to 55 MB/s (partial sums) of
+# estimated input, so they break even at ~1.1 to ~3.4 MB, and a 4 MiB
+# chunk pays its fixed cost at every pass: without ``fan_in``,
+# semdedup_prune took 0.89 -> 1.24 s and semdedup_scaled_prune 1.06 ->
+# 1.26 s at sf0.1 (min of 3, interleaved in one session). The MinHash
+# kernel runs 0.6 MB/s of ITS estimate (the estimate counts a hash
+# array as one element) and breaks even at ~40 KB, so its input is
+# not narrowed.
 _ARROW_TASK_BYTES = 4 * 1024 * 1024
 
 
@@ -164,10 +164,12 @@ def fan_out(df: DataFrame, dense: bool = False) -> DataFrame:
 
 
 def fan_in(df: DataFrame) -> DataFrame:
-    """Narrowing twin of ``fan_out`` for the input of a Python/Arrow
-    kernel: coalesce an over-partitioned input to
+    """Narrowing twin of ``fan_out`` for the input of a Lloyd kernel:
+    coalesce an over-partitioned input to
     ``ceil(size / _ARROW_TASK_BYTES)`` partitions, so every Python task
-    gets a chunk whose compute outweighs its fixed cost. ``coalesce``
+    gets a chunk whose compute outweighs its ~0.06 s fixed cost (the
+    MinHash kernel breaks even far below a chunk and is not narrowed;
+    see ``_ARROW_TASK_BYTES``). ``coalesce``
     is narrow — it never adds an exchange — and the target is not
     capped by the parallelism, so a large input (a real many-split
     corpus) passes through untouched, as does any input when either
@@ -313,9 +315,10 @@ def minhash_signatures(
     so the DuckDB twins replay it with ``list_min(list_transform(...))``.
     Each Arrow batch runs in row chunks bounded by ``_SIG_CHUNK_ELEMS``
     projected elements, so peak memory per task is ~64 MB regardless
-    of batch size. A small over-partitioned input runs as ``fan_in``
-    chunks: one Python task per ``_ARROW_TASK_BYTES`` of estimated
-    input."""
+    of batch size. The input keeps its partitioning: the kernel breaks
+    even with a Python task's fixed cost at ~40 KB of estimated input
+    (see ``_ARROW_TASK_BYTES``), so ``fan_in`` would only serialise
+    it."""
     params = _perm_params(num_perm, seed)
     a_vec = np.array([p[0] for p in params], dtype=np.int64)[:, None]
     b_vec = np.array([p[1] for p in params], dtype=np.int64)[:, None]
@@ -363,7 +366,7 @@ def minhash_signatures(
         flush()
         return pd.Series(out)
 
-    return fan_in(hashes).select("doc_id", _sig("hs").alias("sig"))
+    return hashes.select("doc_id", _sig("hs").alias("sig"))
 
 
 def band_entries(sig: DataFrame, bands: int) -> DataFrame:

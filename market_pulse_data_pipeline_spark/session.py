@@ -5,6 +5,11 @@ skew-join handling), Arrow enabled for the Pandas-UDF paths, UTC session
 time zone so date_trunc/week semantics match the DuckDB oracle, and
 shuffle partitions sized to the local core count (on a real cluster this
 is overridden to ~2-3x total executor cores; AQE coalesces down).
+
+Python workers start from ``worker_daemon``, which imports pyspark off
+Spark's archives, and find the package by name through the executor
+``PYTHONPATH``: a driver runs from any working directory, and an
+executor needs the package at the same path or installed.
 """
 
 from __future__ import annotations
@@ -13,6 +18,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+from market_pulse_data_pipeline_spark import worker_daemon
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "market-pulse-spark",
@@ -20,7 +29,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 
@@ -44,6 +55,8 @@ def get_spark(
         # some fixture parquets carry TIMESTAMP(NANOS); read as long and
         # convert at the source layer (sources.tables handles it)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -223,6 +223,8 @@ def main() -> int:
     from market_pulse_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit")
+    # fan_out's targets follow the parallelism, so rows depend on it
+    cores = spark.sparkContext.defaultParallelism
     rows = []
     full_rows = []  # every audited query (--all): persisted table
     extra_bad: list[str] = []
@@ -255,7 +257,7 @@ def main() -> int:
     out = [
         "# PLAN_AUDIT — structural plan metrics for the bench set",
         "",
-        f"Generated by `tools/plan_audit.py` at {args.sf} (re-run after",
+        f"Generated by `tools/plan_audit.py` at {args.sf} on {cores} cores (re-run after",
         "plan-affecting changes). Columns: shuffle exchanges, broadcast",
         "exchanges, parquet scans (with pushed filters),",
         "Arrow-batched Python operators, row-at-a-time",
@@ -296,7 +298,7 @@ def main() -> int:
         full = [
             "# PLAN_AUDIT_FULL — structural plan metrics, ENTIRE registry",
             "",
-            f"Generated by `tools/plan_audit.py --all` at {args.sf}. Same",
+            f"Generated by `tools/plan_audit.py --all` at {args.sf} on {cores} cores. Same",
             "columns as PLAN_AUDIT.md, one row per registered query, so the",
             "0-rowPy / 0-cartesian claim is reproducible for every plan,",
             "not just the bench set. winFunnel counts global-window",
