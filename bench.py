@@ -18,6 +18,10 @@ the artifact alone):
 - ``samples``: all 3 raw per-pass timings per query, so a reader can
   see WHICH pass a spike landed on (uniform pass-wide inflation =
   host noise; a single query slow in all 3 passes = real).
+- ``codegen_compiles``: classes compiled from generated code in each
+  pass. A warm pass compiles next to none; hundreds mean the codegen
+  cache (``session.CODEGEN_CACHE_ENTRIES``) is smaller than the
+  queries' working set and every pass paid Janino again.
 - ``load_probe_sec``: a fixed single-threaded spin loop timed before
   each pass. The loop does constant work, so probe variance IS the
   ambient-load measurement: if the probes disagree by >10-15% the
@@ -39,7 +43,7 @@ import pandas as pd  # module-level: the warm-up pandas_udf's string
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from market_pulse_data_pipeline_spark.queries import all_queries
-from market_pulse_data_pipeline_spark.session import get_spark
+from market_pulse_data_pipeline_spark.session import codegen_compiles, get_spark
 
 
 def main() -> None:
@@ -93,6 +97,7 @@ def main() -> None:
 
     runs: dict[str, list[float]] = {n: [] for n in bench_queries}
     probes: list[float] = []
+    compiles: list[int] = []
     for _ in range(3):
         probes.append(load_probe())
         # Measurement-hygiene fix (round 17, VERDICT r16 item 2,
@@ -105,12 +110,14 @@ def main() -> None:
         # query from the parquet inputs alone; cache-bearing queries
         # step UP once against r16 numbers — that step is honest.
         spark.catalog.clearCache()
+        compiled = codegen_compiles(spark)
         for name in sorted(bench_queries):
             q = bench_queries[name]
             t0 = time.time()
             df = q.spark(spark, sf_dir)
             df.write.mode("overwrite").format("noop").save()
             runs[name].append(round(time.time() - t0, 3))
+        compiles.append(codegen_compiles(spark) - compiled)
 
     timings: dict[str, float] = {}
     total = 0.0
@@ -134,6 +141,7 @@ def main() -> None:
             {
                 "detail": "bench_noise_evidence",
                 "samples": {n: runs[n] for n in sorted(runs)},
+                "codegen_compiles": compiles,
                 "load_probe_sec": probes,
             }
         )

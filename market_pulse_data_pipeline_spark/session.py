@@ -22,6 +22,18 @@ from market_pulse_data_pipeline_spark import worker_daemon
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Entries in the JVM's cache of compiled whole-stage and expression
+# classes (``spark.sql.codegen.cache.maxEntries``, Spark's default 100).
+# One cold pass compiles ~190 distinct classes for perfbench's
+# query_mix, ~740 for the 43 bench queries and 3,666 (sf0.001) or 3,706
+# (sf0.01) for the whole registry; with 100 entries every warm pass
+# recompiled nearly all of them with Janino. This is the smallest power
+# of two above the registry's working set. The conf is static and
+# ``CodeGenerator``'s cache is JVM-wide and sized when first used, so it
+# is set in the builder: a session the driver builds itself keeps
+# Spark's default.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "market-pulse-spark",
@@ -57,9 +69,17 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", worker_daemon.__name__)
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the JVM has compiled from generated code so far; a
+    generated class found in the codegen cache adds nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

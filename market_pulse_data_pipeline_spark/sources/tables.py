@@ -2,13 +2,16 @@
 
 One parquet file per table; Catalyst handles predicate pushdown and
 column pruning at the scan, so loaders stay plain ``spark.read.parquet``
-— no options that would defeat pushdown.
+— no options that would defeat pushdown. A read without a schema runs a
+one-task schema-inference job, so each file's inferred schema is kept
+for as long as the file is unchanged and later reads pass it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import weakref
 from collections.abc import Iterable
 
 import pyarrow as pa
@@ -27,6 +30,14 @@ from market_pulse_data_pipeline_spark.schemas import TESTDATA_TABLES
 # type; with the session tz pinned to UTC the epoch value is identical
 # either way (and matches DuckDB's naive reading of the same file).
 _EVENT_TS_COLUMNS = {"events": ["ts"]}
+
+# each session's inferred parquet schemas by (path, st_mtime_ns,
+# st_size): a rewritten file gets a new key, so it is inferred again.
+# Kept per session because inference reads session confs
+# (``spark.sql.legacy.parquet.nanosAsLong`` turns a column's type).
+_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkSession, dict[tuple[str, int, int], T.StructType]
+] = weakref.WeakKeyDictionary()
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -91,9 +102,25 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local file's schema
+    once per session: later reads of the unchanged file pass the schema
+    and run no Spark job. A path ``os.stat`` cannot see is read as
+    before."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    schemas = _SCHEMAS.setdefault(spark, {})
+    if key not in schemas:
+        schemas[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schemas[key]).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for col in _EVENT_TS_COLUMNS.get(name, []):
         df = normalize_event_ts(df, col)
     return df

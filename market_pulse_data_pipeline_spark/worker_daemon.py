@@ -10,7 +10,9 @@ before the task reads a row, against 0.06 s without the archives
 through ``spark.python.daemon.module``. It drops the archives from the
 path, checks that pyspark imports without them at the archive's
 version, and runs the stock ``pyspark.daemon.manager()``, whose forked
-workers inherit the clean path.
+workers inherit the clean path. It also imports pandas and pyarrow
+before ``manager()`` forks, which the stock daemon leaves to each
+worker's first Arrow task: ~0.4 s of CPU per worker (SCALING.md).
 
 When pyspark fails to import without the archives, or imports another
 version than the archive holds, the path is restored, one line goes to
@@ -44,13 +46,13 @@ def _archive_version(archives: list[str]) -> str | None:
     return None
 
 
-def select() -> None:
+def select() -> bool:
     """Take the archives off ``sys.path`` and the importer cache, so
     ``pyspark.daemon`` resolves to the unzipped install, when pyspark
-    imports there at the archive's version. Otherwise put the path and
-    the cache back, forget what the check imported and write one line
-    to stderr: ``pyspark.daemon`` then resolves to the archive copy,
-    the stock daemon."""
+    imports there at the archive's version, and return True. Otherwise
+    put the path and the cache back, forget what the check imported,
+    write one line to stderr and return False: ``pyspark.daemon`` then
+    resolves to the archive copy, the stock daemon."""
     path, cache = list(sys.path), dict(sys.path_importer_cache)
     archives = [p for p in path if p.endswith(_ARCHIVES)]
     sys.path[:] = [p for p in path if p not in archives]
@@ -65,17 +67,30 @@ def select() -> None:
     except Exception as exc:  # noqa: BLE001 — any failure means fall back
         got, why = None, f"pyspark does not import off the archives ({exc!r})"
     if got is not None and want in (None, got):
-        return
+        return True
     sys.path[:] = path
     sys.path_importer_cache.clear()
     sys.path_importer_cache.update(cache)
     for name in [m for m in sys.modules if m.split(".")[0] in ("pyspark", "py4j")]:
         del sys.modules[name]
     print(f"worker_daemon: {why}; running the stock daemon", file=sys.stderr)
+    return False
+
+
+def preload() -> None:
+    """Import pandas and pyarrow for the workers ``manager()`` forks.
+    When that fails, write one line to stderr and go on: the daemon
+    still serves tasks that need neither."""
+    try:
+        import pandas  # noqa: F401, PLC0415
+        import pyarrow  # noqa: F401, PLC0415
+    except Exception as exc:  # noqa: BLE001 — any failure leaves it to the workers
+        print(f"worker_daemon: no preload ({exc!r})", file=sys.stderr)
 
 
 def main() -> None:
-    select()
+    if select():
+        preload()
     from pyspark import daemon  # noqa: PLC0415
 
     daemon.manager()

@@ -134,3 +134,27 @@ def test_runs_from_any_working_directory(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     assert "ModuleNotFoundError" not in out.stderr
     assert out.stdout.strip().splitlines()[-1] == "6"
+
+
+def test_workers_start_with_pandas_and_pyarrow(tmp_path):
+    # the daemon imports both before it forks, so a fresh session's
+    # first task, a plain RDD map that uses neither, already holds them
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {ROOT!r})
+        from market_pulse_data_pipeline_spark.session import get_spark
+        spark = get_spark(app_name="mp-preload", shuffle_partitions=1)
+
+        def loaded(_):
+            import sys
+            return [m for m in ("pandas", "pyarrow") if m in sys.modules]
+
+        print(spark.sparkContext.parallelize([0], 1).map(loaded).collect()[0])
+        spark.stop()
+    """)
+    out = _python(
+        ["-c", script], cwd=tmp_path, timeout=300,
+        SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="1g",
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "['pandas', 'pyarrow']"
