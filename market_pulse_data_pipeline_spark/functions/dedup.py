@@ -1,4 +1,4 @@
-"""Scale-path near-duplicate detection: MinHash+LSH and SimHash.
+"""Scale-path near-duplicate detection: MinHash+LSH.
 
 The MinHash layer is three steps that every MinHash query shares:
 ``shingle_hashes`` (word n-grams hashed to one int64 array per doc,
@@ -450,97 +450,3 @@ def minhash_near_duplicates(
     )
     sig.unpersist(blocking=False)
     return out
-
-
-# --- SimHash -------------------------------------------------------------------
-
-
-def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, simhash bigint) — 64-bit SimHash over word tokens.
-
-    Per token: xxhash64 → contribute ±1 per bit; per doc: sign of the
-    per-bit sums. Implemented as 64 conditional-sum aggregations in one
-    hash-aggregate pass (JVM-side, no UDF).
-    """
-    tok = fan_out(docs).select(
-        "doc_id", F.explode(F.split(text_col, " ")).alias("w")
-    ).select("doc_id", F.xxhash64("w").alias("h"))
-    def bit_mask(i: int) -> int:
-        # bit 63 is the sign bit in a signed long: -2^63 has exactly that
-        # bit set, avoiding the 1<<63 overflow
-        return (1 << i) if i < 63 else -(1 << 63)
-
-    bit_aggs = [
-        F.sum(
-            F.when(F.col("h").bitwiseAND(F.lit(bit_mask(i))) != 0, 1).otherwise(-1)
-        ).alias(f"_b{i}")
-        for i in range(64)
-    ]
-    sums = tok.groupBy("doc_id").agg(*bit_aggs)
-    acc = F.lit(0).cast("long")
-    for i in range(64):
-        acc = acc.bitwiseOR(
-            F.when(F.col(f"_b{i}") > 0, F.lit(bit_mask(i)).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sums.select("doc_id", acc.alias("simhash"))
-
-
-def simhash_near_duplicates(
-    docs: DataFrame, text_col: str = "text", max_hamming: int = 3
-) -> DataFrame:
-    """(doc_a, doc_b, hamming) — pairs within a Hamming radius.
-
-    Candidate generation: pigeonhole over 4 16-bit chunks (any pair with
-    hamming ≤ 3 shares at least one exact chunk), so the join is bucketed
-    by (chunk_index, chunk_value); verification via bit_count(xor).
-
-    INVARIANT: 4 chunks make candidate generation complete only for
-    ``max_hamming`` ≤ 3 (k+1 chunks cover radius k) — a larger radius
-    would silently miss pairs whose differing bits span all four chunks.
-    """
-    if max_hamming > 3:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the radius the 4-chunk "
-            "pigeonhole covers (≤ 3); add chunks (k+1 chunks for radius k) "
-            "before raising the threshold"
-        )
-    sig = simhash_signatures(docs, text_col)
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned(F.col("simhash"), c * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc_id", "simhash", "e.chunk", "e.val")
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    hamming = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )

@@ -14,14 +14,6 @@ rows), turn them into exclusive carry-in offsets on the driver, and
 broadcast-add them back. Wall-clock is two parallel passes + an
 O(partitions) driver step instead of one serial pass over all rows.
 
-`adaptive_prefix_sum` (round 14) adds the crossover: a MODEL-sized
-input (a histogram, a per-key daily rollup) should not pay the
-two-phase form's materialization + totals job + offset join, so at or
-below `PREFIX_SERIAL_MAX_ROWS` it runs the plain serial window and
-above it the two-phase form — both accumulate in decimal, so the
-result is bit-identical whichever branch runs. The rule itself is
-oracle-checked by the `prefix_sum_adaptive_switch` staged query.
-
 Exactness: summands are cast to decimal before any accumulation, so
 local sums, partition totals, and offsets are all order-independent
 and the result is bit-identical to the single-window form (pinned by
@@ -34,56 +26,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from market_pulse_data_pipeline_spark.sources.tables import local_frame
-
-# Crossover for adaptive_prefix_sum: at or below this row count the
-# serial single-partition window WINS — the two-phase form costs a
-# localCheckpoint materialization, a totals job, and an offset join,
-# pure overhead when the input already fits one task comfortably
-# (model-sized rollups: histograms, per-key daily totals). Above it
-# the serial window is the classic one-task funnel and two-phase
-# takes over. The constant is deliberately conservative (a few
-# thousand rows is far below any single-task memory or latency
-# cliff); the oracle-checked `prefix_sum_adaptive_switch` query pins
-# the RULE itself cross-engine.
-PREFIX_SERIAL_MAX_ROWS = 2_000
-
-
-def adaptive_prefix_sum(
-    df: DataFrame,
-    order_cols: list[str],
-    value: Column,
-    out_col: str = "running_total",
-    n_ranges: int = 8,
-    scale: int = 6,
-    serial_max_rows: int = PREFIX_SERIAL_MAX_ROWS,
-) -> tuple[DataFrame, str]:
-    """``partitioned_prefix_sum`` with the serial-vs-two-phase
-    crossover applied by input size. Returns ``(result, mode)`` where
-    mode is ``"serial"`` or ``"two_phase"`` — callers that surface the
-    decision (the adaptive-switch witness query) put it in a column.
-
-    The size probe is one ``count()`` action — a bounded driver value.
-    At warehouse scale the row count comes from table statistics /
-    file metadata instead; the count action is the portable stand-in
-    and costs one scan of a frame the caller is about to scan anyway.
-
-    Both branches accumulate in DECIMAL(38, scale), so the result is
-    bit-identical whichever branch runs — pinned by the
-    `prefix_sum_adaptive_switch` oracle row, whose compared bytes
-    include the chosen mode AND the running totals.
-    """
-    n = df.count()
-    if n <= serial_max_rows:
-        dec = f"decimal(38,{scale})"
-        w = (
-            Window.orderBy(*[F.col(c) for c in order_cols])
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return df.withColumn(out_col, F.sum(value.cast(dec)).over(w)), "serial"
-    return (
-        partitioned_prefix_sum(df, order_cols, value, out_col, n_ranges, scale),
-        "two_phase",
-    )
 
 
 def partitioned_prefix_sum(

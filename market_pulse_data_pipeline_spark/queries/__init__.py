@@ -126,9 +126,7 @@ _R15_FIRST_WITNESS = _R15_WINDOW[:3]
 # the touched-but-unwitnessed benched queries (every r16/r17 rewrite
 # plus one kmeans_snapped_fit consumer for the fused-fit family),
 # then resumes stalest-first (the last r9 row, then the r10 ledger
-# head). The two r29 recovery queries VERDICT names are still staged,
-# not registered (their flip is BUILD work, out of scope for an
-# optimization round), so they cannot take a window slot.
+# head). Only registered queries can take a window slot.
 _R17_TOUCHED = [
     "semdedup_prune", "semdedup_scaled_prune", "basket_lift_pairs",
     "weekly_rollup", "rolling_avg_7rows", "weekly_ohlc",
@@ -168,63 +166,6 @@ _R17_WINDOW = _R17_TOUCHED + [
 # Empty: rounds 16-17 are optimization rounds, the registry is frozen
 # at 301.
 _R17_DEFER: list[str] = []
-
-# stable alias for tools (check_oracle --staged, hostile_check): the
-# newest registrations still awaiting their first driver witness —
-# points at the current round's deferral list so the tools never need
-# a per-round rename again
-PENDING_FIRST_WITNESS = _R17_DEFER
-
-
-def staging_candidates():
-    """Every staged-but-unregistered query (name -> QueryDef), merged
-    across staging modules. Round 15 flipped r23_staging on its named
-    round (t_closeness_check, auc_quality_classifier,
-    unimax_epoch_cap_allocation — now a pure @register module like
-    r9_staging; registry 298 → 301). The remaining staged queries are
-    the capability batches from rounds 13-14 with their own named
-    flip rounds per the round-13 handoff rule: r24_staging flips
-    round 16 (pii_cluster_contagion, intra_doc_line_dedup,
-    cross_label_margin_mining), r25_staging flips round 17
-    (harmonic_size_class_packing, flashtext_multi_replace,
-    prefix_sum_adaptive_switch), r26_staging flips round 18
-    (pmi_collocation_mining, cohens_kappa_agreement,
-    bootstrap_metric_ci), r27_staging flips round 19
-    (group_kfold_leakage_audit, pii_redact_spans,
-    zipf_token_frequency_profile), r28_staging flips round 20
-    (heaps_vocab_growth_curve, rouge_n_eval_overlap, span_match_f1),
-    r29_staging — staged in round 15, the streaming-state
-    recovery witness VERDICT r14 item 4 ordered — flips round 16
-    alongside r24, and r30_staging — staged in the round-15 surplus
-    session, closing VERDICT r14 "What's missing" 5 (ROUGE-L/LCS with
-    a FULL value-hash oracle via a DuckDB recursive CTE, so the
-    zero-rows-only invariant holds) — flips round 17 alongside r25.
-    Filtering on QUERY_REGISTRY makes the per-round @stage ->
-    @register flip drop a batch out of this view automatically.
-    Stable entry point for check_oracle --staging /
-    hostile_check --staging."""
-    import importlib
-
-    out = {}
-    for modname in (
-        "r24_staging",
-        "r25_staging",
-        "r26_staging",
-        "r27_staging",
-        "r28_staging",
-        "r29_staging",
-        "r30_staging",
-    ):
-        try:
-            mod = importlib.import_module(
-                f"market_pulse_data_pipeline_spark.queries.{modname}"
-            )
-        except ImportError:
-            continue
-        out.update(
-            {n: d for n, d in mod.STAGED.items() if n not in QUERY_REGISTRY}
-        )
-    return out
 
 # name -> latest CORRECTNESS_r{N}.json round with a green driver row.
 # Insertion order within a round is the original witness-window order;
@@ -662,15 +603,12 @@ def stalest_green(window: int = 50) -> list[str]:
 
 def r18_rotation(window: int = 50) -> list[str]:
     """The proposed round-18 window under the steady-state cadence:
-    never-witnessed registrations at the head — the staged flip
-    batches (r24_staging/r29_staging were scheduled for round 16,
-    r25_staging/r30_staging for round 17; both deferred while the
-    optimization rounds froze the registry at 301) once they flip to
-    @register, via ``_R17_DEFER`` or a pre-pin window head — then the
-    stalest greens assuming this round's window lands green (its 50
-    names move to round 17 in the ledger): the r10 ledger remainder
-    continues the rotation. Any r17 RED row outranks all of this and
-    goes to the very front instead (red beats rotation)."""
+    never-witnessed registrations at the head (``_R17_DEFER``, empty
+    while the registry is frozen at 301), then the stalest greens
+    assuming this round's window lands green (its 50 names move to
+    round 17 in the ledger): the r10 ledger remainder continues the
+    rotation. Any r17 RED row outranks all of this and goes to the very
+    front instead (red beats rotation)."""
     never = [n for n in _R17_DEFER if n in QUERY_REGISTRY]
     after_r17 = dict(_DRIVER_GREEN)
     # update() keeps existing positions for re-witnesses — the same

@@ -60,17 +60,12 @@ def _doc_ids(sf_dir: str) -> list[int]:
 
 
 def test_r15_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
+    from market_pulse_data_pipeline_spark.queries import _DRIVER_GREEN
 
     # registered in round 12 (the fourth batch of the accelerated drain),
     # first driver witness green in CORRECTNESS_r12 (the ledger records it)
     assert set(R15_NAMES) <= set(QUERY_REGISTRY)
     assert all(_DRIVER_GREEN.get(x) == 12 for x in R15_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
     assert all(d.oracle is not None for d in STAGED.values())
 
 

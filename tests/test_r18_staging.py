@@ -34,17 +34,12 @@ STAGED = {n: QUERY_REGISTRY[n] for n in R18_NAMES if n in QUERY_REGISTRY}
 
 
 def test_r18_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
+    from market_pulse_data_pipeline_spark.queries import _DRIVER_GREEN
 
     # registered in round 13 (the second accelerated drain), first
     # driver witness green in CORRECTNESS_r13 (the ledger records it)
     assert set(R18_NAMES) <= set(QUERY_REGISTRY)
     assert all(_DRIVER_GREEN.get(x) == 13 for x in R18_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
     assert all(d.oracle is not None for d in STAGED.values())
 
 

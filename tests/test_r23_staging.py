@@ -39,17 +39,12 @@ STAGED = {n: QUERY_REGISTRY[n] for n in R23_NAMES if n in QUERY_REGISTRY}
 
 
 def test_r23_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _R15_FIRST_WITNESS,
-        staging_candidates,
-    )
+    from market_pulse_data_pipeline_spark.queries import _R15_FIRST_WITNESS
 
     # registered in round 15 (the named flip round), heading the
     # correctness window for their first driver witness
     assert set(R23_NAMES) <= set(QUERY_REGISTRY)
     assert set(R23_NAMES) <= set(_R15_FIRST_WITNESS)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
     assert all(d.oracle is not None for d in STAGED.values())
 
 

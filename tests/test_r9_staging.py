@@ -33,17 +33,12 @@ STAGED = {n: QUERY_REGISTRY[n] for n in R9_NAMES if n in QUERY_REGISTRY}
 
 
 def test_r10_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
+    from market_pulse_data_pipeline_spark.queries import _DRIVER_GREEN
 
     # registered in round 10, first driver witness green in
     # CORRECTNESS_r10 (the ledger now records it)
     assert set(R9_NAMES) <= set(QUERY_REGISTRY)
     assert all(_DRIVER_GREEN.get(n) == 10 for n in R9_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(R9_NAMES) & staging_candidates().keys()
     # no rows-only drift: every registration ships a value-hash oracle
     assert all(QUERY_REGISTRY[n].oracle is not None for n in R9_NAMES)
     # VERDICT r9 item 3: the two corpus-scale shapes enter the bench set

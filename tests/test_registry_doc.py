@@ -31,3 +31,29 @@ def test_registry_doc_lists_every_query():
         f"REGISTRY.md missing rows for {missing}: "
         "run tools/gen_registry_doc.py"
     )
+
+
+def test_every_query_module_is_imported_and_none_is_staged():
+    # A module under queries/ that the package never imports is code no
+    # registry, `__spark_entry__` or benchmark can reach; a STAGED dict or
+    # stage() decorator is a pre-registration side channel. Neither may
+    # return.
+    import sys
+
+    import market_pulse_data_pipeline_spark.queries as pkg
+
+    pkg_dir = pathlib.Path(pkg.__file__).parent
+    modules = {
+        p.stem: sys.modules.get(f"{pkg.__name__}.{p.stem}")
+        for p in pkg_dir.glob("*.py")
+        if p.stem != "__init__"
+    }
+    assert modules
+    unimported = sorted(n for n, m in modules.items() if m is None)
+    assert unimported == [], f"never imported by the package: {unimported}"
+    staged = sorted(
+        n
+        for n, m in modules.items()
+        if {"STAGED", "stage"} & vars(m).keys()
+    )
+    assert staged == [], f"modules with a staging side channel: {staged}"

@@ -1,5 +1,5 @@
 """Semantics tests for the scale-path operators: MinHash-LSH vs exact
-Jaccard, SimHash, LSH-ANN recall vs brute force, multimodal plumbing."""
+Jaccard, LSH-ANN recall vs brute force, multimodal plumbing."""
 
 import os
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from market_pulse_data_pipeline_spark.functions.dedup import (
     minhash_near_duplicates,
     shingle_hashes,
-    simhash_near_duplicates,
 )
 from market_pulse_data_pipeline_spark.functions.multimodal import (
     decode_media,
@@ -107,26 +106,6 @@ def test_minhash_queries_release_their_caches(spark, sf_dir):
         for k, v in persisted().items():
             if k not in before:
                 v.unpersist(True)
-
-
-def test_simhash_finds_planted_dups(planted_docs):
-    pairs = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_near_duplicates(planted_docs, max_hamming=3).collect()
-    }
-    planted = {
-        (r.doc_id, r.doc_id + PLANT)
-        for r in planted_docs.filter(
-            (F.col("doc_id") % 11 == 0) & (F.col("doc_id") < PLANT)
-        ).collect()
-    }
-    found = planted & pairs
-    # one appended token can flip >3 of 64 bits on short docs — SimHash
-    # recall at a tight Hamming radius is inherently partial; require a
-    # solid majority rather than perfection
-    assert len(found) >= len(planted) * 0.6, (
-        f"simhash found {len(found)}/{len(planted)} planted pairs"
-    )
 
 
 def test_lsh_ann_recall_vs_brute_force(spark, sf_dir):

@@ -133,19 +133,6 @@ def main() -> int:
         help="check exactly the first 50 queries() entries — the "
         "driver's CORRECTNESS snapshot",
     )
-    ap.add_argument(
-        "--staging",
-        action="store_true",
-        help="sweep the pre-registration staging dict "
-        "(queries.staging_candidates()) with the identical machinery",
-    )
-    ap.add_argument(
-        "--staged",
-        action="store_true",
-        help="check the newest registrations still awaiting their "
-        "first driver witness (queries/__init__.py::"
-        "PENDING_FIRST_WITNESS) instead of the whole registry",
-    )
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
@@ -159,31 +146,8 @@ def main() -> int:
             f"read_parquet('{args.sf}/{name}.parquet')"
         )
 
-    if args.staging:
-        from market_pulse_data_pipeline_spark.queries import (
-            staging_candidates,
-        )
-
-        staged = staging_candidates()
-        qs = {n: d.spark for n, d in staged.items()}
-        oracles = {n: d.oracle for n, d in staged.items() if d.oracle}
-    elif args.staged:
-        # "staged" means the newest registrations still awaiting
-        # their first driver witness (the current deferral list)
-        from market_pulse_data_pipeline_spark.queries import (
-            PENDING_FIRST_WITNESS,
-            QUERY_REGISTRY,
-        )
-
-        qs = {n: QUERY_REGISTRY[n].spark for n in PENDING_FIRST_WITNESS}
-        oracles = {
-            n: QUERY_REGISTRY[n].oracle
-            for n in PENDING_FIRST_WITNESS
-            if QUERY_REGISTRY[n].oracle
-        }
-    else:
-        qs = entrymod.queries()
-        oracles = entrymod.oracle_sql()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None
     if args.window:
         only = set(list(qs)[:50]) | (only or set())

@@ -56,19 +56,6 @@ def main() -> int:
             "even though the layout-friendly default sweep passes."
         ),
     )
-    ap.add_argument(
-        "--staging",
-        action="store_true",
-        help="sweep the pre-registration staging dict "
-        "(queries.staging_candidates()) with the identical machinery",
-    )
-    ap.add_argument(
-        "--staged",
-        action="store_true",
-        help="sweep the newest registrations still awaiting their "
-        "first driver witness (queries/__init__.py::"
-        "PENDING_FIRST_WITNESS) instead of the whole registry",
-    )
     args = ap.parse_args()
 
     if args.chaos:
@@ -119,31 +106,8 @@ def main() -> int:
             f"read_parquet('{args.sf}/{name}.parquet')"
         )
 
-    if args.staging:
-        from market_pulse_data_pipeline_spark.queries import (
-            staging_candidates,
-        )
-
-        staged = staging_candidates()
-        qs = {n: d.spark for n, d in staged.items()}
-        oracles = {n: d.oracle for n, d in staged.items() if d.oracle}
-    elif args.staged:
-        # "staged" means the newest registrations still awaiting
-        # their first driver witness (the current deferral list)
-        from market_pulse_data_pipeline_spark.queries import (
-            PENDING_FIRST_WITNESS,
-            QUERY_REGISTRY,
-        )
-
-        qs = {n: QUERY_REGISTRY[n].spark for n in PENDING_FIRST_WITNESS}
-        oracles = {
-            n: QUERY_REGISTRY[n].oracle
-            for n in PENDING_FIRST_WITNESS
-            if QUERY_REGISTRY[n].oracle
-        }
-    else:
-        qs = entrymod.queries()
-        oracles = entrymod.oracle_sql()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None
     failures = []
     for name, fn in qs.items():

@@ -90,14 +90,6 @@ BOUNDED_WINDOW_FUNNELS = {
     "categorical_dictionary_encode": (
         "window over one count row per distinct category, not rows"
     ),
-    # staged (flips round 17): the adaptive serial-vs-two-phase
-    # crossover witness — its SERIAL leg is a global window over the
-    # (event_type, day) rollup (150 rows at every fixture SF), the
-    # exact model-sized case the crossover routes to serial; the
-    # data-sized leg rides the two-phase path with no global window
-    "prefix_sum_adaptive_switch": (
-        "serial leg windows over the 150-row type-day rollup only"
-    ),
 }
 
 METRIC_KEYS = (

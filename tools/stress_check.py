@@ -2489,68 +2489,6 @@ def main() -> int:
             ),
         )
 
-    # PII cluster contagion (staged r13 for round 16): token-tagged
-    # multiplication so content prefixes differ per copy — cluster
-    # COUNT scales, cluster SIZE stays constant (a real 300x corpus
-    # does not grow each cluster 300x). Map-only flags + ONE
-    # cluster-keyed window shuffle: cost must be linear in docs.
-    if only is None or "pii_contagion" in only:
-        from market_pulse_data_pipeline_spark.queries.r24_staging import (
-            pii_cluster_contagion_from,
-        )
-
-        run(
-            "pii_contagion",
-            pii_cluster_contagion_from(
-                tagged_docs("docs_pcc").select("doc_id", "text")
-            ),
-        )
-
-    # Intra-doc line dedup (staged r13 for round 16): per-doc work is
-    # corpus-independent (chunking + a (doc, line) aggregate), so the
-    # token-tagged multiplication must scale linearly in docs.
-    if only is None or "intra_line_dedup" in only:
-        from market_pulse_data_pipeline_spark.queries.r24_staging import (
-            intra_doc_line_dedup_from,
-        )
-
-        run(
-            "intra_line_dedup",
-            intra_doc_line_dedup_from(
-                tagged_docs("docs_ild").select("doc_id", "text")
-            ),
-        )
-
-    # Margin mining (staged r13 for round 16): the query side stays
-    # FIXED (base table) while the candidate corpus multiplies — the
-    # decontamination asymmetry; a multiplied query side would square
-    # the pair count and measure the wrong thing. Cost must be linear
-    # in candidates (|Q| map-side probes per candidate + a
-    # query-partitioned top-(k+1) window).
-    if only is None or "margin_mining" in only:
-        from market_pulse_data_pipeline_spark.queries.r24_staging import (
-            _MM_Q_MOD,
-            margin_mine,
-            quantize_embeddings,
-        )
-
-        base_mm = quantize_embeddings(
-            load_table(spark, args.sf, "embeddings")
-        )
-        q_mm = base_mm.filter(F.col("vec_id") % _MM_Q_MOD == 0).select(
-            F.col("vec_id").alias("qid"),
-            F.col("label").alias("q_label"),
-            F.col("v").alias("qvec"),
-        )
-        cand_mm = mat(
-            multiplied(
-                load_table(spark, args.sf, "embeddings"), args.mult,
-                ["vec_id"],
-            ),
-            "emb_marginmine",
-        )
-        run("margin_mining", margin_mine(quantize_embeddings(cand_mm), q_mm))
-
     # Portable-bloom decontamination probe (staged round 11 for round
     # 16): the eval set (and hence the bloom array) is FIXED while the
     # corpus multiplies — the real decontamination asymmetry. The probe
@@ -2808,352 +2746,6 @@ def main() -> int:
                 spark, stage_dir
             ),
         )
-
-    # Harmonic size-class packing (staged r14 for round 17): plain
-    # multiplied copies — the lang x class key domain is FIXED (bounded
-    # by the capacity constant), so per-class populations multiply and
-    # the two partitioned windows must scale near-linearly (n log n
-    # within ~60 (lang, class) partitions).
-    if only is None or "harmonic_pack" in only:
-        from market_pulse_data_pipeline_spark.queries.r25_staging import (
-            harmonic_size_class_packing_from,
-        )
-
-        docs_hp = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents").select(
-                    "doc_id", "lang", "text"
-                ),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_harmonic",
-        )
-        run("harmonic_pack", harmonic_size_class_packing_from(docs_hp))
-
-    # FlashText multi-replace (staged r14 for round 17): plain
-    # multiplied copies (token tagging would break the phrase matches
-    # the stage exists to exercise) — the replace chain is map-only,
-    # so cost must be strictly linear in corpus characters.
-    if only is None or "flashtext_replace" in only:
-        from market_pulse_data_pipeline_spark.queries.r25_staging import (
-            flashtext_multi_replace_from,
-        )
-
-        docs_ft = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents").select(
-                    "doc_id", "text"
-                ),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_flashtext",
-        )
-        run("flashtext_replace", flashtext_multi_replace_from(docs_ft))
-
-    # Adaptive prefix-sum switch (staged r14 for round 17): events
-    # multiply on event_id only, so the raw leg grows (two-phase path,
-    # range partition + local cumsums) while the (event_type, day)
-    # rollup leg stays FIXED at 150 rows — the model-sized serial case
-    # is corpus-size-independent by construction, which is the whole
-    # point of the crossover.
-    if only is None or "adaptive_prefix" in only:
-        from market_pulse_data_pipeline_spark.queries.r25_staging import (
-            _PS_DAY_US,
-            prefix_sum_adaptive_switch_from,
-        )
-
-        ev_ap = mat(
-            multiplied(
-                load_table(spark, args.sf, "events").select(
-                    "event_id",
-                    "event_type",
-                    "value",
-                    F.expr(f"unix_micros(ts) div {_PS_DAY_US}").alias(
-                        "day"
-                    ),
-                ),
-                args.mult,
-                ["event_id"],
-            ),
-            "events_adaptive",
-        )
-        run("adaptive_prefix", prefix_sum_adaptive_switch_from(ev_ap))
-
-    # PMI collocation mining (staged r14 for round 18): plain
-    # multiplied copies — the vocabulary is FIXED, so the unigram and
-    # bigram aggregates stay vocabulary-bounded while counts scale;
-    # cost must be linear in corpus tokens (one bigram explode + two
-    # bounded hash aggs + vocabulary-keyed joins).
-    if only is None or "pmi_mine" in only:
-        from market_pulse_data_pipeline_spark.queries.r26_staging import (
-            pmi_collocation_mining_from,
-        )
-
-        docs_pm = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents").select(
-                    "doc_id", "text"
-                ),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_pmi",
-        )
-        run("pmi_mine", pmi_collocation_mining_from(docs_pm))
-
-    # Cohen's kappa (staged r14 for round 18): map-only labels + one
-    # per-lang aggregate — 5 counters per language, strictly linear.
-    if only is None or "kappa_agree" in only:
-        from market_pulse_data_pipeline_spark.queries.r26_staging import (
-            cohens_kappa_agreement_from,
-        )
-
-        docs_kp = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents").select(
-                    "doc_id", "lang", "n_chars"
-                ),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_kappa",
-        )
-        run("kappa_agree", cohens_kappa_agreement_from(docs_kp))
-
-    # Bootstrap CI (staged r14 for round 18): the 40x replicate
-    # fan-out is a constant factor (the grid-join discipline), so the
-    # stage must scale linearly in docs x B.
-    if only is None or "bootstrap_ci" in only:
-        from market_pulse_data_pipeline_spark.queries.r26_staging import (
-            bootstrap_metric_ci_from,
-        )
-
-        docs_bs = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents").select(
-                    "lang", "doc_id", "n_chars"
-                ),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_bootstrap",
-        )
-        run("bootstrap_ci", bootstrap_metric_ci_from(docs_bs))
-
-    # GroupKFold leakage audit (staged r14 for round 19): token-tagged
-    # multiplication so copies have distinct digests — duplicate
-    # CLUSTER SIZE stays constant (twins pair only within their copy)
-    # while cluster count scales; the digest self-join must stay
-    # linear in true duplication, never all-pairs.
-    if only is None or "kfold_audit" in only:
-        from market_pulse_data_pipeline_spark.queries.r27_staging import (
-            group_kfold_leakage_audit_from,
-        )
-
-        run(
-            "kfold_audit",
-            group_kfold_leakage_audit_from(
-                tagged_docs("docs_kfold").select("doc_id", "source", "text")
-            ),
-        )
-
-    # PII redaction (staged r14 for round 19): two regexp_replace
-    # passes + three count extractions, map-only — strictly linear in
-    # corpus characters.
-    if only is None or "pii_redact" in only:
-        from market_pulse_data_pipeline_spark.queries.r27_staging import (
-            pii_redact_spans_from,
-        )
-
-        docs_rd = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents").select(
-                    "doc_id", "text"
-                ),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_redact",
-        )
-        run("pii_redact", pii_redact_spans_from(docs_rd))
-
-    # Zipf frequency profile (staged r14 for round 19): plain
-    # multiplied copies — the vocabulary is FIXED, so the (lang,
-    # token) aggregate state is constant while frequencies scale;
-    # cost must be linear in corpus tokens.
-    if only is None or "zipf_profile" in only:
-        from market_pulse_data_pipeline_spark.queries.r27_staging import (
-            zipf_token_frequency_profile_from,
-        )
-
-        docs_zp = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents").select(
-                    "doc_id", "lang", "text"
-                ),
-                args.mult,
-                ["doc_id"],
-            ).select("lang", "text"),
-            "docs_zipf",
-        )
-        run("zipf_profile", zipf_token_frequency_profile_from(docs_zp))
-
-    # Heaps vocabulary growth (staged r14 for round 20): multiplied
-    # copies carry copy-distinct planted uniq tokens (doc_id offsets
-    # change the plant names), so the first-occurrence aggregate's
-    # key domain grows — cost must stay linear in corpus tokens.
-    if only is None or "heaps_curve" in only:
-        from market_pulse_data_pipeline_spark.queries.r28_staging import (
-            heaps_vocab_growth_curve_from,
-        )
-
-        docs_hv = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents").select(
-                    "doc_id", "text"
-                ),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_heaps",
-        )
-        run("heaps_curve", heaps_vocab_growth_curve_from(docs_hv))
-
-    # ROUGE eval overlap (staged r14 for round 20): the reference set
-    # multiplies, so per-pair cost must be linear (gram explodes +
-    # doc-keyed joins; pair volume IS the eval set).
-    if only is None or "rouge_eval" in only:
-        from market_pulse_data_pipeline_spark.queries.r28_staging import (
-            _RG_EVAL_MOD,
-            rouge_n_eval_overlap_from,
-        )
-
-        refs_rg = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents")
-                .filter(F.col("doc_id") % _RG_EVAL_MOD == 0)
-                .select("doc_id", "text"),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_rouge",
-        )
-        run("rouge_eval", rouge_n_eval_overlap_from(refs_rg))
-
-    # Span-match F1 (staged r14 for round 20): spans multiply with the
-    # corpus; the (doc, start) equi-join touches true spans only —
-    # cost must be linear in corpus tokens.
-    if only is None or "span_f1" in only:
-        from market_pulse_data_pipeline_spark.queries.r28_staging import (
-            span_match_f1_from,
-        )
-
-        docs_sp = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents").select(
-                    "doc_id", "text"
-                ),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_spanf1",
-        )
-        run("span_f1", span_match_f1_from(docs_sp))
-
-    # Streaming dedup-state recovery (staged r15 for round 16): keys
-    # multiply (user offset), so the dropDuplicatesWithinWatermark
-    # state store grows linearly with the multiplier — the honest
-    # worst case for recovery, which must reload state, never
-    # reprocess history. Timed around the WHOLE two-run protocol
-    # (feed write + run 1 + restart + run 2), since the streaming work
-    # is eager inside the call.
-    if only is None or "dedup_recovery" in only:
-        from market_pulse_data_pipeline_spark.queries.r29_staging import (
-            _DD_MOD,
-            streaming_dedup_state_recovery_from,
-        )
-
-        ev_dd = mat(
-            multiplied(
-                load_table(spark, args.sf, "events")
-                .filter(F.col("user_id") % _DD_MOD == 0)
-                .select("user_id", "event_type", "ts"),
-                args.mult,
-                ["user_id"],
-            ),
-            "events_dedup_rec",
-        )
-        t0_dd = time.time()
-        out_dd = streaming_dedup_state_recovery_from(
-            ev_dd,
-            # PID-scoped like _R29_ROOT (ADVICE r15): two concurrent
-            # stress runs with the same --mult must not collide on
-            # checkpoint/sink state
-            f"/tmp/stress_r29_dedup_mult{args.mult}_{os.getpid()}"
-        )
-        rows["dedup_recovery"] = out_dd.count()
-        timings["dedup_recovery"] = round(time.time() - t0_dd, 2)
-        print(
-            f"  dedup_recovery               rows={rows['dedup_recovery']:>10}"
-            f" [{timings['dedup_recovery']:.1f}s]",
-            file=sys.stderr,
-        )
-
-    # Streaming stateful crash recovery (staged r15 for round 16):
-    # users (= GroupState entries) multiply; the crash/WAL-replay
-    # protocol must stay linear in events with per-batch state
-    # commits. Timed around the whole crash + restart sequence.
-    if only is None or "crash_recovery" in only:
-        from market_pulse_data_pipeline_spark.queries.r29_staging import (
-            _SS_MOD,
-            _SS_REM,
-            streaming_stateful_crash_recovery_from,
-        )
-
-        ev_ss = mat(
-            multiplied(
-                load_table(spark, args.sf, "events")
-                .filter(F.col("user_id") % _SS_MOD == _SS_REM)
-                .select("user_id", "ts", "value"),
-                args.mult,
-                ["user_id"],
-            ),
-            "events_crash_rec",
-        )
-        t0_ss = time.time()
-        out_ss = streaming_stateful_crash_recovery_from(
-            ev_ss, f"/tmp/stress_r29_stateful_mult{args.mult}_{os.getpid()}"
-        )
-        rows["crash_recovery"] = out_ss.count()
-        timings["crash_recovery"] = round(time.time() - t0_ss, 2)
-        print(
-            f"  crash_recovery               rows={rows['crash_recovery']:>10}"
-            f" [{timings['crash_recovery']:.1f}s]",
-            file=sys.stderr,
-        )
-
-    # ROUGE-L / LCS (staged r15-surplus for round 17): per-pair O(n*m)
-    # int64 DP inside one map-only Arrow pass — cost must be linear in
-    # PAIRS (document lengths are bounded), never corpus-quadratic.
-    if only is None or "rouge_l_eval" in only:
-        from market_pulse_data_pipeline_spark.queries.r30_staging import (
-            _RL_EVAL_MOD,
-            rouge_l_eval_overlap_from,
-        )
-
-        refs_rl = mat(
-            multiplied(
-                load_table(spark, args.sf, "documents")
-                .filter(F.col("doc_id") % _RL_EVAL_MOD == 0)
-                .select("doc_id", "text"),
-                args.mult,
-                ["doc_id"],
-            ),
-            "docs_rouge_l",
-        )
-        run("rouge_l_eval", rouge_l_eval_overlap_from(refs_rl))
 
     print(json.dumps({"mult": args.mult, "rows": rows, "seconds": timings}))
     return 0
